@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
 /** Command-line entry point — the engine's equivalent of the
   * reference's only UX surface (`fhir_etl/cli.py:12-65`):
@@ -22,7 +22,10 @@ import org.apache.spark.sql.SparkSession
   * `file: reason line` row per invalid line (its
   * `path:offset exception json` loop), and EXITS 1 when any exception
   * row exists (`cli.py:44 sys.exit(1)`). A non-directory `--path` is an
-  * error (its `ValueError`): reported on stderr, exit 2.
+  * error (its `ValueError`): reported on stderr, exit 2; so is a
+  * directory without `*.ndjson` files. Counts and invalid lines come from
+  * one aggregation ([[graft.etl.Validate.report]]); invalid lines print
+  * grouped by file name, in line order within a file.
   *
   * The argument surface is parsed by hand (zero-dependency contract —
   * no click analogue on the classpath) and factored as [[Main.run]]
@@ -82,15 +85,23 @@ object Main {
             // the reference raises ValueError for a non-directory path
             System.err.println(s"Path: '$path' is not a valid directory.")
             2
+          } else if (graft.etl.Validate.ndjsonFiles(path).isEmpty) {
+            System.err.println(s"Path: '$path' holds no *.ndjson files.")
+            2
           } else try {
+            // counts and invalid lines from one aggregation, one row per file
+            val files = graft.etl.Validate.report(spark, path).collect()
+              .sortBy(_.getAs[String]("file"))
             // result.resources analogue: {type: n_valid} counts
-            val counts = graft.etl.Validate.summary(spark, path).collect()
-            System.err.println(counts.map(r =>
-              s"${r.getString(0)}: ${r.getLong(1)}").mkString("{", ", ", "}"))
+            val counts = files.filter(_.getAs[Long]("n_valid") > 0)
+              .sortBy(_.getAs[String]("resource_type"))
+            System.err.println(counts.map(r => s"${r.getAs[String]("resource_type")}: " +
+              r.getAs[Long]("n_valid")).mkString("{", ", ", "}"))
             // the per-exception loop: file + reason + offending line
-            val errs = graft.etl.Validate.errors(spark, path).collect()
-            errs.foreach(r => System.err.println(
-              s"${r.getString(0)}: ${r.getString(1)} ${r.getString(2)}"))
+            val errs = files.flatMap(r => r.getSeq[Row](r.fieldIndex("invalid"))
+              .map(e => s"${r.getAs[String]("file")}: ${e.getAs[String]("reason")} " +
+                e.getAs[String]("line")))
+            errs.foreach(System.err.println)
             if (errs.nonEmpty) 1 else 0 // cli.py:44
           } catch {
             case e: Exception if !debug =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Validation layer (V1–V3) — the reference's `fhir_etl validate` CLI
   * (`fhir_etl/cli.py:17-45`): per-type counts over a META directory of
   * NDJSON files plus a per-line error report, re-expressed as one
-  * distributed scan per file.
+  * distributed scan over the directory.
   *
   * V1 structural rules are a declarative column rule-set (required
   * fields, enum domains, uuid shape) instead of pydantic model
@@ -34,59 +34,69 @@ object Validate {
       "withdrawn"),
     "DocumentReference" -> Seq("current", "superseded", "entered-in-error"))
 
-  /** Partial schema for the fields the rules inspect — `from_json`
-    * parses each line ONCE against it (extra fields are ignored, a
-    * malformed line yields an all-null struct in PERMISSIVE mode).
-    * Replaces four `get_json_object` calls that each re-parsed the full
-    * line (4× the parse work — was 11s of the sf0.1 bench). */
-  private val RuleSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "resourceType STRING, id STRING, status STRING, " +
-      "identifier ARRAY<STRUCT<value STRING>>")
-
-  /** Validate one NDJSON file: returns rows
-    * (file, resource_type, ok BOOLEAN, reason, line). Line-based and
-    * schema-free, so a malformed line can never poison the scan. */
-  def validateFile(spark: SparkSession, path: String,
-      expectedType: String): DataFrame = {
+  /** Validate every `*.ndjson` file in `dir` with ONE text scan: returns
+    * rows (file, resource_type, id, ok BOOLEAN, reason, line, line_pos).
+    * Each line's expected type is its file name minus `.ndjson`
+    * (`_metadata.file_name`); `line_pos` orders a file's lines
+    * (split offset, then position within the split). Line-based and
+    * schema-free, so a malformed line can never poison the scan.
+    *
+    * Invariant: the full line is JSON-parsed once per row. That needs
+    * care because Catalyst's filter pushdown substitutes a projection's
+    * aliases into the `ok`/`!ok` filter above it, which copies a
+    * projected `from_json(line)` into every rule branch (7 parses per
+    * valid line). The parse therefore happens in a `json_tuple`
+    * generator, which no filter on its output can cross; only the
+    * small `identifier` substring is parsed again. ValidateSpec pins one
+    * line parse per scan in the optimized plans of [[summary]],
+    * [[profile]] and [[errors]]. */
+  def validateDir(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val parsed = spark.read.text(path)
-      .filter(length(trim($"value")) > 0)
-      .select($"value".as("line"), from_json($"value", RuleSchema).as("j"))
-      .select($"line",
-        $"j.resourceType".as("rt"),
-        $"j.id".as("id"),
-        $"j.status".as("status"),
-        // `get` (0-based), not element_at/getItem: ANSI mode throws OOB
-        get($"j.identifier", lit(0)).getField("value").as("ident0"))
-    val statusRule = StatusDomain.get(expectedType) match {
-      case Some(domain) => $"status".isin(domain: _*)
-      case None => lit(true)
+    val files = ndjsonFiles(dir)
+    require(files.nonEmpty, s"no *.ndjson files in directory '$dir'")
+    val parsed = spark.read.text(files: _*)
+      .select($"value".as("line"), $"_metadata.file_name".as("file"),
+        $"_metadata.file_block_start".as("block"))
+      .filter(length(trim($"line")) > 0)
+      .select($"line", $"file",
+        struct($"block", monotonically_increasing_id()).as("line_pos"),
+        json_tuple($"line", "resourceType", "id", "status", "identifier"))
+      .toDF("line", "file", "line_pos", "rt", "id", "status", "identifiers")
+      .withColumn("resource_type", regexp_replace($"file", "\\.ndjson$", ""))
+      // `get` (0-based), not element_at/getItem: ANSI mode throws OOB
+      .withColumn("ident0", get(from_json($"identifiers", IdentifierSchema),
+        lit(0)).getField("value"))
+    val expected = $"resource_type"
+    val statusRule = StatusDomain.foldLeft(lit(true)) { case (rule, (t, domain)) =>
+      when(expected === t, $"status".isin(domain: _*)).otherwise(rule)
     }
     val reason = when($"rt".isNull, "malformed JSON or missing resourceType")
-      .when($"rt" =!= expectedType,
-        concat(lit(s"resourceType mismatch: expected $expectedType, got "), $"rt"))
-      .when(!lit(SupportedTypes.contains(expectedType)),
-        lit(s"unsupported resource type $expectedType"))
+      .when($"rt" =!= expected,
+        concat(lit("resourceType mismatch: expected "), expected, lit(", got "), $"rt"))
+      .when(!expected.isin(SupportedTypes.toSeq: _*),
+        concat(lit("unsupported resource type "), expected))
       .when($"id".isNull || !$"id".rlike(UuidRe), "id is not a valid uuid")
       .when($"ident0".isNull, "missing identifier[0].value")
       .when(!statusRule, concat(lit("status out of domain: "), $"status"))
     parsed.select(
-      lit(new java.io.File(path).getName).as("file"),
-      lit(expectedType).as("resource_type"),
+      $"file",
+      $"resource_type",
       $"id",
       reason.isNull.as("ok"),
       reason.as("reason"),
-      substring($"line", 1, 80).as("line"))
+      substring($"line", 1, 80).as("line"),
+      $"line_pos")
   }
 
-  /** V3: validate every `<Type>.ndjson` in a directory. */
-  def validateDir(spark: SparkSession, dir: String): DataFrame = {
-    val files = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".ndjson")).sortBy(_.getName)
-    files.map { f =>
-      validateFile(spark, f.getPath, f.getName.stripSuffix(".ndjson"))
-    }.reduce(_ unionByName _)
-  }
+  /** The `*.ndjson` files directly under `dir`, sorted by path; empty
+    * when `dir` is not a directory. */
+  def ndjsonFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.isFile && f.getName.endsWith(".ndjson"))
+      .map(_.getPath).sorted
+
+  private val IdentifierSchema = org.apache.spark.sql.types.DataType
+    .fromDDL("ARRAY<STRUCT<value STRING>>")
 
   /** The summary the reference CLI prints: `{type: count}` of valid
     * resources (README.md:35,38). */
@@ -106,8 +116,20 @@ object Validate {
         min(col("id")).as("min_id"), max(col("id")).as("max_id"))
       .orderBy(col("resource_type"))
 
-  /** Per-line quarantine report (path:line-snippet exception analogue). */
+  /** Per-line quarantine report (path:line-snippet exception analogue),
+    * in scan order: a file's lines stay in line order, but files may
+    * interleave. */
   def errors(spark: SparkSession, dir: String): DataFrame =
     validateDir(spark, dir).filter(!col("ok"))
       .select(col("file"), col("reason"), col("line"))
+
+  /** Counts and quarantine rows from ONE aggregation, for the CLI: one row
+    * per file (file, resource_type, n_valid, invalid) where `invalid` is
+    * the file's (line_pos, reason, line) structs in line order. */
+  def report(spark: SparkSession, dir: String): DataFrame =
+    validateDir(spark, dir)
+      .groupBy(col("file"), col("resource_type"))
+      .agg(count_if(col("ok")).as("n_valid"),
+        array_sort(collect_list(when(!col("ok"),
+          struct(col("line_pos"), col("reason"), col("line"))))).as("invalid"))
 }

@@ -2,7 +2,6 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** NDJSON sinks — the reference's native output format: one JSON object
@@ -24,14 +23,24 @@ import org.apache.spark.sql.functions._
 object Ndjson {
 
   /** K1/K2: overwrite-write df as `<dir>/<resourceType>.ndjson`. */
-  def write(df: DataFrame, dir: String, resourceType: String): Unit = {
-    val tmp = Files.createTempDirectory("ndjson").resolve("out").toString
-    df.toJSON.coalesce(1).write.mode(SaveMode.Overwrite).text(tmp)
-    val part = Files.list(Paths.get(tmp)).filter(_.getFileName.toString
-      .startsWith("part-")).findFirst().get()
-    Files.createDirectories(Paths.get(dir))
-    Files.move(part, Paths.get(dir, s"$resourceType.ndjson"),
-      StandardCopyOption.REPLACE_EXISTING)
+  def write(df: DataFrame, dir: String, resourceType: String): Unit =
+    writeSingleFile(df.toJSON.toDF("line").coalesce(1),
+      Paths.get(dir, s"$resourceType.ndjson"))
+
+  /** Write a one-partition frame of lines as `target`: Spark writes into
+    * a fresh temp dir, its one part file is moved over `target`, and the
+    * temp dir is deleted whether or not the write succeeded. */
+  private def writeSingleFile(lines: DataFrame, target: Path): Unit = {
+    val tmp = Files.createTempDirectory("ndjson")
+    try {
+      val out = tmp.resolve("out")
+      lines.write.mode(SaveMode.Overwrite).text(out.toString)
+      val parts = Files.list(out)
+      val part = try parts.filter(_.getFileName.toString.startsWith("part-"))
+        .findFirst().get() finally parts.close()
+      Files.createDirectories(target.getParent)
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    } finally graft.queries.Tables.deleteRecursively(tmp.toFile)
   }
 
   /** K3: `create_or_extend` (`fhir_etl/utils.py:101-135`) — upsert new
@@ -44,6 +53,16 @@ object Ndjson {
     *  - duplicate id within a batch → last occurrence wins (dict-build)
     *  - existing entries keep their original line position
     *  - blank/malformed lines in the existing file are skipped
+    *
+    * Plan: every line gets a position (`pos`: old lines in file order,
+    * new lines after all of them) and a precedence that is unique per
+    * row. ONE `groupBy(id)` aggregate picks `max_by(line, precedence)`
+    * as the id's winner and `min(pos)` as its first position, so the
+    * winner is deterministic and the only id shuffle is the aggregate's.
+    * `repartition(1).sortWithinPartitions(first_pos)` then orders the
+    * single output partition without a global sort's range-partitioning
+    * sample job. NdjsonSpec pins the plan: one aggregate keyed on id, no
+    * `RangePartitioning` exchange.
     */
   def createOrExtend(spark: SparkSession, newDf: DataFrame, dir: String,
       resourceType: String, updateExisting: Boolean = false): Unit = {
@@ -63,29 +82,21 @@ object Ndjson {
         old.unionByName(newLines)
       } else newLines
 
-    val withId = all
-      .withColumn("id", get_json_object($"line", "$.id"))
-      .filter($"id".isNotNull)
     // winner per id: with updateExisting the max position overall wins
     // (new > old, later-in-batch > earlier); without it, old wins when
     // present (old positions boosted above every new position)
     val precedence =
       if (updateExisting) $"pos"
       else when($"src" === 0, $"pos" + lit(1L << 62)).otherwise($"pos")
-    val w = Window.partitionBy($"id").orderBy(precedence.desc)
-    val resolved = withId
-      .withColumn("rn", row_number().over(w))
-      .withColumn("first_pos", min($"pos").over(Window.partitionBy($"id")))
-      .filter($"rn" === 1)
-      .orderBy($"first_pos")
+    val resolved = all
+      .withColumn("id", get_json_object($"line", "$.id"))
+      .filter($"id".isNotNull)
+      .groupBy($"id")
+      .agg(max_by($"line", precedence).as("line"), min($"pos").as("first_pos"))
+      .repartition(1)
+      .sortWithinPartitions($"first_pos")
       .select($"line")
-
-    val tmp = Files.createTempDirectory("ndjson").resolve("out").toString
-    resolved.coalesce(1).write.mode(SaveMode.Overwrite).text(tmp)
-    val part = Files.list(Paths.get(tmp)).filter(_.getFileName.toString
-      .startsWith("part-")).findFirst().get()
-    Files.createDirectories(Paths.get(dir))
-    Files.move(part, path, StandardCopyOption.REPLACE_EXISTING)
+    writeSingleFile(resolved, path)
   }
 
   /** Streaming form of the K1/K3 tail: drain a stream of resources into

@@ -1,7 +1,10 @@
 package graft.etl
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
+  AttributeSet, ExprId, Expression, GetJsonObject, JsonToStructs, JsonTuple}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** V3 parity with the reference CLI (`README.md:35,38`) plus the full
@@ -80,5 +83,77 @@ class ValidateSpec extends AnyFunSuite {
     assert(errs.exists(_.contains("resourceType mismatch")))
     assert(errs.exists(_.contains("not a valid uuid")))
     assert(errs.exists(_.contains("status out of domain")))
+  }
+
+  test("empty directory: validateDir fails naming the directory") {
+    val dir = Files.createTempDirectory("validate-empty").toString
+    Files.write(Paths.get(dir, "notes.txt"), "not ndjson\n".getBytes)
+    val e = intercept[IllegalArgumentException](Validate.validateDir(spark, dir))
+    assert(e.getMessage.contains(dir), e.getMessage)
+  }
+
+  /** (full-line JSON parses, scans) in df's optimized plan. A parse is
+    * full-line when its JSON input traces back, through aliases, to a
+    * scan's output column; parses of a field the line parse produced
+    * (the `identifier` substring) do not count. */
+  private def lineParses(df: DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.optimizedPlan
+    val scans = plan.collect { case r: LogicalRelation => r }
+    val raw = AttributeSet(scans.flatMap(_.output))
+    val aliases: Map[ExprId, Expression] = plan.flatMap(_.expressions)
+      .flatMap(_.collect { case a: Alias => a.exprId -> a.child }).toMap
+    def source(e: Expression): Expression = e match {
+      case a: AttributeReference if aliases.contains(a.exprId) =>
+        source(aliases(a.exprId))
+      case other => other
+    }
+    val parses = plan.flatMap(_.expressions).flatMap(_.collect {
+      case p @ (_: JsonToStructs | _: JsonTuple | _: GetJsonObject) => p
+    }).filter(p => source(p.children.head) match {
+      case a: AttributeReference => raw.contains(a)
+      case _ => false
+    })
+    (parses.size, scans.size)
+  }
+
+  private val planLine = """{"resourceType":"Patient","id":"fb96f2a9-8ec2-5784-ba62-16f168155434","identifier":[{"value":"ok"}]}"""
+
+  /** Patient.ndjson, Specimen.ndjson and ResearchSubject.ndjson, each
+    * holding one Patient line. */
+  private def planDir(): String = {
+    val dir = Files.createTempDirectory("validate-plan").toString
+    Seq("Patient", "Specimen", "ResearchSubject").foreach(t =>
+      Files.write(Paths.get(dir, s"$t.ndjson"), (planLine + "\n").getBytes))
+    dir
+  }
+
+  private def assertOneParsePerScan(name: String, df: DataFrame): Unit = {
+    val (parses, scans) = lineParses(df)
+    assert(scans >= 1, s"$name: no scan in the optimized plan")
+    assert(parses == scans, s"$name: $parses full-line JSON parses over " +
+      s"$scans scans:\n${df.queryExecution.optimizedPlan}")
+  }
+
+  test("plan pin: summary, errors and profile parse each line once per scan") {
+    val dir = planDir()
+    assertOneParsePerScan("summary", Validate.summary(spark, dir))
+    assertOneParsePerScan("errors", Validate.errors(spark, dir))
+    assertOneParsePerScan("profile", Validate.profile(spark, dir))
+  }
+
+  test("report: one scan, one line parse, counts and invalid lines per file") {
+    val dir = planDir()
+    Files.write(Paths.get(dir, "Specimen.ndjson"), "oops\n\nnope\n".getBytes,
+      java.nio.file.StandardOpenOption.APPEND)
+    val df = Validate.report(spark, dir)
+    assertOneParsePerScan("report", df)
+    val got = df.collect().map(r => r.getAs[String]("file") -> (
+      r.getAs[Long]("n_valid"),
+      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("invalid"))
+        .map(_.getAs[String]("line")))).toMap
+    assert(got == Map(
+      "Patient.ndjson" -> (1L, Nil),
+      "ResearchSubject.ndjson" -> (0L, Seq(planLine.take(80))),
+      "Specimen.ndjson" -> (0L, Seq(planLine.take(80), "oops", "nope"))))
   }
 }
