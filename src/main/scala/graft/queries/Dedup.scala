@@ -334,32 +334,19 @@ object Dedup extends Registry {
       s"|h=$NumHashes|b=$NumBands|cap=$MaxBucketSize|even"
   }
 
-  /** The stored signature index for `dir`'s corpus half: reused when the
-    * content key matches (validity = key file equals + parquet _SUCCESS
-    * present, so a torn write can never serve), rebuilt otherwise. The
-    * directory is content-addressed by the key's md5, so indexes for
-    * different corpora coexist. Returns the index frame and whether this
-    * call built it. */
+  /** The stored signature index for `dir`'s corpus half
+    * ([[Tables.store]]): indexes for different corpora coexist. Returns
+    * the index frame, whether this call built it, and its directory. */
   private[queries] def loadOrBuildSigIndex(s: SparkSession, dir: String)
       : (DataFrame, Boolean, String) = {
     import s.implicits._
-    val key = sigIndexKey(dir)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val indexDir = Tables.persistentScratchDir(s"q4b_sigindex_$tag")
-    val dataDir = java.nio.file.Paths.get(indexDir, "data")
-    val keyFile = java.nio.file.Paths.get(indexDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(dataDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q4b_sigindex", sigIndexKey(dir), "data") { d =>
       val docs = table(s, dir, "documents").select($"doc_id", $"text")
       val corpusReps = contentClassReps(docs.filter($"doc_id" % 2 === 0))
       capBuckets(bandedSignatures(corpusReps), Seq("band", "bh"))
-        .write.mode("overwrite").parquet(dataDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.parquet(s"$d/data")
     }
-    (s.read.parquet(dataDir.toString), !valid, indexDir)
+    (s.read.parquet(s"${st.dir}/data"), st.built, st.dir)
   }
 
   def minhashIncremental(s: SparkSession, dir: String): DataFrame = {
@@ -685,22 +672,12 @@ object Dedup extends Registry {
     val p = s"$dir/documents.parquet"
     val key = s"$SubstrKernelVersion|$p|${Tables.sourceStamp(p)}" +
       s"|k=$SubstrSeedLen|min=$SubstrMinMatch|cap=$MaxBucketSize|even"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val indexDir = Tables.persistentScratchDir(s"qbc_seedindex_$tag")
-    val dataDir = java.nio.file.Paths.get(indexDir, "data")
-    val keyFile = java.nio.file.Paths.get(indexDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(dataDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "qbc_seedindex", key, "data") { d =>
       val reps = contentClassReps(table(s, dir, "documents")
         .select($"doc_id", $"text").filter($"doc_id" % 2 === 0))
-      capBuckets(substrSeeds(reps), Seq("win"))
-        .write.mode("overwrite").parquet(dataDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+      capBuckets(substrSeeds(reps), Seq("win")).write.parquet(s"$d/data")
     }
-    (s.read.parquet(dataDir.toString), !valid)
+    (s.read.parquet(s"${st.dir}/data"), st.built)
   }
 
   /** qbc's serve: the batch half's seeds (computed fresh, capped per
@@ -1721,8 +1698,8 @@ object Dedup extends Registry {
 
   /** Build-or-reuse qb4's stored state over the base split: the (doc →
     * root) assignment, the fp → min-base-doc representative index, and
-    * the bounded base shingle arrays. Content-addressed (torn-write
-    * rule: key file last). */
+    * the bounded base shingle arrays. Content-addressed
+    * ([[Tables.store]]). */
   private[queries] def loadOrBuildCcState(s: SparkSession,
       dir: String): (String, Boolean) = {
     import s.implicits._
@@ -1730,41 +1707,31 @@ object Dedup extends Registry {
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|cc=canon+jac${CcJaccardThreshold}lt$CcPairBound" +
       s"|delta=mod${CcDeltaMod}eq$CcDeltaRem"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"qb4_cc_$tag")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val dirs = Seq("assign", "fpindex", "shingles")
-      .map(d => java.nio.file.Paths.get(stateDir, d))
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      dirs.forall(d => java.nio.file.Files.exists(d.resolve("_SUCCESS")))
-    if (!valid) {
+    val st = Tables.store(s, "qb4_cc", key,
+        "assign", "fpindex", "shingles") { d =>
       graft.GraftExtensions.ensureRegistered(s)
       val base = table(s, dir, "documents").select($"doc_id", $"text")
         .filter(pmod($"doc_id", lit(CcDeltaMod)) =!= CcDeltaRem)
       base.select($"doc_id", ccFp.as("fp"))
         .groupBy($"fp").agg(min($"doc_id").as("rep"))
-        .write.mode("overwrite").parquet(s"$stateDir/fpindex")
+        .write.parquet(s"$d/fpindex")
       base.filter($"doc_id" < CcPairBound)
         .select($"doc_id", expr("shingle_hashes(text, 2)").as("sh"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$stateDir/shingles")
+        .coalesce(1).write.parquet(s"$d/shingles")
       val wFp = Window.partitionBy($"fp")
       val canonB = base.select($"doc_id", ccFp.as("fp"))
         .withColumn("root", min($"doc_id").over(wFp))
         .filter($"doc_id" =!= $"root")
         .select($"doc_id".as("src"), $"root".as("dst"))
-      val bsh = readShingles(s, stateDir)
+      val bsh = readShingles(s, d)
       val jacB = bsh.as("a").join(bsh.as("b"), $"a.doc_id" < $"b.doc_id")
         .filter(expr(s"jaccard_sorted(a.sh, b.sh) >= $CcJaccardThreshold"))
         .select($"a.doc_id".as("src"), $"b.doc_id".as("dst"))
       graft.operators.ConnectedComponents.run(canonB.unionAll(jacB))
         .select($"id", $"component".as("root"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/assign")
-      java.nio.file.Files.writeString(keyFile, key)
+        .coalesce(1).write.parquet(s"$d/assign")
     }
-    (stateDir, !valid)
+    (st.dir, st.built)
   }
 
   /** The qb4 contraction algebra, factored for the spec's planted

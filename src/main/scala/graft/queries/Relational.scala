@@ -1406,30 +1406,22 @@ object Relational extends Registry {
   /** Build-or-reuse qa7's per-batch partial state: the customer table
     * split into 3 deterministic arrival batches (c_custkey % 3), each
     * folded exactly as a foreachBatch trigger would. Content-addressed
-    * on the source stamp (torn-write rule: key file last). */
+    * on the source stamp ([[Tables.store]]). */
   private[queries] def loadOrBuildKAnonState(s: SparkSession,
       dir: String): (String, Boolean) = {
     import s.implicits._
     val src = s"$dir/customer.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|qa7-brackets|k=$AnonK|l=$AnonL|batches=3"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"qa7_kanon_$tag")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(stateDir, "partials"))
-    if (!valid) {
+    val batches = 0L to 2L
+    val st = Tables.store(s, "qa7_kanon", key,
+        batches.map(b => s"partials/batch=$b"): _*) { d =>
       val c = Tables.table(s, dir, "customer")
-      (0L to 2L).foreach { b =>
-        kAnonFoldBatch(s, stateDir, b,
-          c.filter(pmod($"c_custkey", lit(3)) === b))
+      batches.foreach { b =>
+        kAnonFoldBatch(s, d, b, c.filter(pmod($"c_custkey", lit(3)) === b))
       }
-      java.nio.file.Files.writeString(keyFile, key)
     }
-    (stateDir, !valid)
+    (st.dir, st.built)
   }
 
   /** qa5 thresholds: minimum anonymity set size and sensitive-value
@@ -1516,23 +1508,14 @@ object Relational extends Registry {
     val src = s"$dir/orders.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|agg=hll-custkey|lgk=$HllLgK|base=mod${HllDeltaMod}ne0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9c_hll_$tag")
-    val skDir = java.nio.file.Paths.get(stateDir, "sketches")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(skDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q9c_hll", key, "sketches") { d =>
       Tables.table(s, dir, "orders")
         .filter(pmod($"o_orderkey", lit(HllDeltaMod)) =!= 0)
         .groupBy($"o_orderpriority")
         .agg(hll_sketch_agg($"o_custkey", lit(HllLgK)).as("sk_base"))
-        .write.mode("overwrite").parquet(skDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.parquet(s"$d/sketches")
     }
-    (s.read.parquet(skDir.toString), !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/sketches"), st.built, st.dir)
   }
 
   /** The maintained estimate: stored base registers ∪ delta-batch
@@ -1642,9 +1625,7 @@ object Relational extends Registry {
   }
 
   /** Build-or-reuse the stored base-split counter grid. Returns
-    * (counters, rebuilt, stateDir). Torn-write rule shared with
-    * q9c/q9b: the key file is written last, so interrupted builds leave
-    * a key mismatch and are rebuilt wholesale. */
+    * (counters, rebuilt, stateDir). */
   private[queries] def loadOrBuildCmsState(s: SparkSession, dir: String)
       : (DataFrame, Boolean, String) = {
     import s.implicits._
@@ -1654,27 +1635,18 @@ object Relational extends Registry {
     // passed the contract
     val key = s"v2|$src|${Tables.sourceStamp(src)}" +
       s"|agg=cms-userid|d=$CmsDepth|w=$CmsWidth|base=mod${CmsDeltaMod}ne0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9e_cms_$tag")
-    val gridDir = java.nio.file.Paths.get(stateDir, "counters")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(gridDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q9e_cms", key, "counters") { d =>
       cmsCounters(cmsEvents(s, dir)
           .filter(pmod($"event_id", lit(CmsDeltaMod)) =!= 0)
           .select($"user_id"))
-        .write.mode("overwrite").parquet(gridDir.toString)
-      // contract (lossless merge), ON THE BUILD RUN ONLY (qb4's rule;
-      // pre-r20 every serve re-counted the full event stream to
-      // re-prove it): stored base grid + delta counters must equal a
-      // full rebuild bit-for-bit. Throws before the key file lands.
+        .write.parquet(s"$d/counters")
+      // contract (lossless merge), ON THE BUILD RUN ONLY (qb4's rule):
+      // stored base grid + delta counters must equal a full rebuild
+      // bit-for-bit; a throw here publishes nothing.
       val delta = cmsEvents(s, dir)
         .filter(pmod($"event_id", lit(CmsDeltaMod)) === 0)
         .select($"user_id")
-      val merged = s.read.parquet(gridDir.toString)
+      val merged = s.read.parquet(s"$d/counters")
         .withColumnRenamed("cnt", "cnt_base")
         .join(cmsCounters(delta).withColumnRenamed("cnt", "cnt_delta"),
           Seq("d", "w"), "full")
@@ -1690,9 +1662,8 @@ object Relational extends Registry {
         .collect().head
       require(!diff.isNullAt(0) && diff.getLong(0) == 0L,
         "q9e: merged CMS counters diverged from a from-scratch rebuild")
-      java.nio.file.Files.writeString(keyFile, key)
     }
-    (s.read.parquet(gridDir.toString), !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/counters"), st.built, st.dir)
   }
 
   /** The maintained grid: stored base counters + delta-batch counters,
@@ -1810,6 +1781,9 @@ object Relational extends Registry {
   val QtBucketW = 10000L
   private val QtDeltaMod = 10
   private val QtPs = Seq(50, 90, 99)
+  /** Bound on the collected histogram: TPC-H prices stay under $105k,
+    * i.e. ≤ 1,050 buckets of QtBucketW cents. */
+  private val QtMaxBuckets = 2048
 
   /** The exact integer basis both engines share: l_extendedprice in
     * rounded cents (a raw double×100 cast would truncate 936.01→93600
@@ -1835,8 +1809,7 @@ object Relational extends Registry {
   }
 
   /** Build-or-reuse the stored base-split histogram. Returns
-    * (histogram, rebuilt, stateDir). Torn-write rule shared with
-    * q9c/q9e: key file last. */
+    * (histogram, rebuilt, stateDir). */
   private[queries] def loadOrBuildQtState(s: SparkSession, dir: String)
       : (DataFrame, Boolean, String) = {
     import s.implicits._
@@ -1846,25 +1819,16 @@ object Relational extends Registry {
     // passed the contract
     val key = s"v2|$src|${Tables.sourceStamp(src)}" +
       s"|agg=hist-extprice-cents|w=$QtBucketW|base=mod${QtDeltaMod}ne0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9t_hist_$tag")
-    val histDir = java.nio.file.Paths.get(stateDir, "hist")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(histDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q9t_hist", key, "hist") { d =>
       qtHist(qtCents(s, dir)
           .filter(pmod($"l_orderkey", lit(QtDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(histDir.toString)
-      // contract (lossless merge), ON THE BUILD RUN ONLY (qb4's rule;
-      // pre-r20 every serve re-histogrammed the full corpus to
-      // re-prove it): stored base buckets + delta buckets must equal
-      // a full rebuild bit-for-bit. Throws before the key file lands.
+        .write.parquet(s"$d/hist")
+      // contract (lossless merge), ON THE BUILD RUN ONLY (qb4's rule):
+      // stored base buckets + delta buckets must equal a full rebuild
+      // bit-for-bit; a throw here publishes nothing.
       val delta = qtHist(qtCents(s, dir)
         .filter(pmod($"l_orderkey", lit(QtDeltaMod)) === 0))
-      val merged = s.read.parquet(histDir.toString)
+      val merged = s.read.parquet(s"$d/hist")
         .withColumnRenamed("cnt", "cnt_base")
         .join(delta.withColumnRenamed("cnt", "cnt_delta"), Seq("b"), "full")
         .select($"b",
@@ -1878,9 +1842,8 @@ object Relational extends Registry {
         .collect().head
       require(!diff.isNullAt(0) && diff.getLong(0) == 0L,
         "q9t: merged histogram diverged from a from-scratch rebuild")
-      java.nio.file.Files.writeString(keyFile, key)
     }
-    (s.read.parquet(histDir.toString), !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/hist"), st.built, st.dir)
   }
 
   /** The maintained histogram: stored base buckets + delta-batch
@@ -1963,7 +1926,9 @@ object Relational extends Registry {
     // and the exact arm's per-bucket offsets (exclusive prefix) all
     // fold from the collected rows; the r20 single-partition
     // WindowExec over the bucket axis is gone entirely.
-    val hist = merged.orderBy($"b").collect()
+    val hist = merged.orderBy($"b").limit(QtMaxBuckets + 1).collect()
+    require(hist.length <= QtMaxBuckets,
+      s"q9t: maintained histogram exceeds $QtMaxBuckets buckets")
     val nTotal = hist.iterator.map(_.getLong(1)).sum
     def targetOf(p: Int): Long = (p.toLong * nTotal + 99L) / 100L
     val estRows = QtPs.flatMap { p =>
@@ -2002,12 +1967,18 @@ object Relational extends Registry {
       .withColumn("cb", expr(s"cents div $QtBucketW"))
     val wIn = Window.partitionBy($"cb").orderBy($"cents")
       .rowsBetween(Window.unboundedPreceding, 0)
+    // A bucket the histogram lacks has no offset: its rows keep a null
+    // `cum`, join every target, and are collected as `missing` instead
+    // of being dropped.
     val vcum = perCents.withColumn("cumw", sum($"cnt").over(wIn))
-      .join(broadcast(offRows.toDF("cb", "off")), Seq("cb"))
-      .select($"cents", ($"cumw" + $"off").as("cum"))
+      .join(broadcast(offRows.toDF("cb", "off")), Seq("cb"), "left")
+      .select($"cents", $"cb", ($"cumw" + $"off").as("cum"))
     val targets = QtPs.map(p => (p.toLong, targetOf(p))).toDF("p", "tgt")
-    val exact = vcum.join(broadcast(targets), $"cum" >= $"tgt")
-      .groupBy($"p").agg(min($"cents").as("exact_cents"))
+    val exact = vcum
+      .join(broadcast(targets), $"cum" >= $"tgt" || $"cum".isNull)
+      .groupBy($"p").agg(
+        min(when($"cum".isNotNull, $"cents")).as("exact_cents"),
+        array_sort(collect_set(when($"cum".isNull, $"cb"))).as("missing"))
 
     val out = est.join(exact, Seq("p"))
       .select($"p", lit(nTotal).as("n"),
@@ -2016,12 +1987,16 @@ object Relational extends Registry {
         $"exact_cents",
         $"exact_cents".between($"bstar" * QtBucketW,
           ($"bstar" + 1) * QtBucketW - 1).as("within_bucket"),
-        lit(mergeEq).as("merge_equals_rebuild"))
+        lit(mergeEq).as("merge_equals_rebuild"), $"missing")
       .orderBy($"p")
       .localCheckpoint(true) // bounded: |QtPs| rows
-    require(out.filter(!$"within_bucket").isEmpty,
+    val checks = out.select($"missing", $"within_bucket").collect()
+    val missing = checks.flatMap(_.getSeq[Long](0)).distinct.sorted
+    require(missing.isEmpty, "q9t: lineitem buckets " +
+      s"${missing.mkString(", ")} are missing from the maintained histogram")
+    require(checks.forall(_.getBoolean(1)),
       "q9t: exact quantile escaped the estimated bucket — histogram broken")
-    out
+    out.drop("missing")
   }
 
   // ------------------------------------------------------------------
@@ -2125,31 +2100,21 @@ object Relational extends Registry {
   private val DayNanos = 86400000000000L
 
   /** Build-or-reuse the per-day HLL register store over the event log.
-    * Returns (state, rebuilt, stateDir). Torn-write rule shared with
-    * q9c/q9e/q9t: key file last. */
+    * Returns (state, rebuilt, stateDir). */
   private[queries] def loadOrBuildDailyHll(s: SparkSession, dir: String)
       : (DataFrame, Boolean, String) = {
     import s.implicits._
     val src = s"$dir/events.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|agg=daily-hll-user|lgk=$HllLgK"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9w_dailyhll_$tag")
-    val skDir = java.nio.file.Paths.get(stateDir, "sketches")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(skDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q9w_dailyhll", key, "sketches") { d =>
       Tables.eventsRaw(s, dir)
         .select($"user_id", expr(s"ts div $DayNanos").as("day"))
         .groupBy($"day")
         .agg(hll_sketch_agg($"user_id", lit(HllLgK)).as("sk"))
-        .write.mode("overwrite").parquet(skDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.parquet(s"$d/sketches")
     }
-    (s.read.parquet(skDir.toString), !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/sketches"), st.built, st.dir)
   }
 
   /** The q9w serve path alone — range estimates from stored registers,

@@ -838,8 +838,8 @@ object Similarity extends Registry {
     * sf families and q5f's partitioned family), the two slowest
     * queries in the r13 suite precisely because each recomputed this
     * corpus×queries scan. Stored once per corpus generation under a
-    * key of source stamp + scorer parameters (q4b signature-index
-    * precedent; torn-write rule: key file last); bounded output:
+    * key of source stamp + scorer parameters ([[Tables.store]]);
+    * bounded output:
     * ≤ |queries| × K rows. A regenerated corpus changes the stamp and
     * rebuilds — the stored arm can never serve stale ground truth. */
   private[queries] def exactTopkStored(s: SparkSession,
@@ -1071,35 +1071,23 @@ object Similarity extends Registry {
   // floor AND the pruning proof are require()d driver-side.
   // ------------------------------------------------------------------
   /** The q52-cell hive-partitioned corpus layout, content-addressed on
-    * the embeddings stamp — the disk layout a production vector store
-    * MAINTAINS rather than rebuilds per serve (q4b precedent; torn-
-    * write rule: key file last). Shared by q58 (pruning proof) and q5f
-    * (recall contract on the production layout): in r13 each rebuilt
-    * the identical full-corpus partitioned write on every run. */
+    * the embeddings stamp ([[Tables.store]]) — the disk layout a
+    * production vector store MAINTAINS rather than rebuilds per serve.
+    * Shared by q58 (pruning proof) and q5f (recall contract on the
+    * production layout). */
   private[queries] def cellLayoutStored(s: SparkSession,
       dir: String): String = {
     val src = s"$dir/embeddings.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}|layout=ivf-cells-q52"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q58_layout_$tag")
-    val outDir = java.nio.file.Paths.get(stateDir, "cells")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(outDir.resolve("_SUCCESS"))
-    if (!valid) {
-      val c = corpus(s, dir)
+    val st = Tables.store(s, "q58_layout", key, "cells") { d =>
       // int dir values so the read-back partition column needs no cast
       // (a cast on the partition column would defeat pruning)
       table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-        .join(assignCells(c).select(col("vec_id"),
+        .join(assignCells(corpus(s, dir)).select(col("vec_id"),
           col("cell").cast("int").as("cell")), Seq("vec_id"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(outDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.partitionBy("cell").parquet(s"$d/cells")
     }
-    outDir.toString
+    s"${st.dir}/cells"
   }
 
   def annRecallPartitioned(s: SparkSession, dir: String): DataFrame = {
@@ -2413,21 +2401,12 @@ object Similarity extends Registry {
     val src = s"$dir/embeddings.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|ivf-cells=lt8|base=mod${IvfDeltaMod}ne0|stats=int-micro"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9n_ivf_$tag")
-    val cellDir = java.nio.file.Paths.get(stateDir, "cells")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(cellDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q9n_ivf", key, "cells") { d =>
       cellStats(assignCells(corpus(s, dir))
         .filter(pmod(col("vec_id"), lit(IvfDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(cellDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.parquet(s"$d/cells")
     }
-    (s.read.parquet(cellDir.toString), !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/cells"), st.built, st.dir)
   }
 
   def ivfIncremental(s: SparkSession, dir: String): DataFrame = {
@@ -2534,21 +2513,12 @@ object Similarity extends Registry {
     val src = s"$dir/embeddings.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|moments=micro6|base=mod${IvfDeltaMod}ne0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9p_moments_$tag")
-    val momDir = java.nio.file.Paths.get(stateDir, "moments")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(momDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q9p_moments", key, "moments") { d =>
       momentStats(corpus(s, dir)
         .filter(pmod(col("vec_id"), lit(IvfDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(momDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.parquet(s"$d/moments")
     }
-    (s.read.parquet(momDir.toString), !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/moments"), st.built, st.dir)
   }
 
   def featureMoments(s: SparkSession, dir: String): DataFrame = {

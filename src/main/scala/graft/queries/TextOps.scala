@@ -1929,10 +1929,6 @@ object TextOps extends Registry {
       s"|k=$LangIdBuckets|r=$LangIdRounds|pfx=$LangIdPrefix"
   }
 
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** The stored training trajectory — (round, n_err, cls, bucket, w,
     * traj_md5), content-addressed on [[langIdKey]] (the q99/qb6
     * build-once idiom the r17 review asked this family to adopt):
@@ -1967,7 +1963,7 @@ object TextOps extends Registry {
           (c, ci) <- classes.zipWithIndex
           // one md5 per (round, cls) — constant across the K bucket
           // rows, so hash once here, not once per bucket
-          vecMd5 = md5Hex(snapshot._2(ci).mkString(","))
+          vecMd5 = Tables.md5Hex(snapshot._2(ci).mkString(","))
           b <- 0 until LangIdBuckets
         } yield (r0 + 1, snapshot._1, c, b, snapshot._2(ci)(b), vecMd5)
         rows.toDF("round", "n_err", "cls", "bucket", "w", "traj_md5")
@@ -2370,10 +2366,7 @@ object TextOps extends Registry {
   }
 
   /** Build-or-reuse the stored base-split LM count tables. Returns
-    * (bigram, unigram, rebuilt, stateDir). Torn-write rule shared with
-    * q9b/q9c/q9e: the key file is written LAST, so an interrupted build
-    * leaves a key mismatch and the next call discards the partial state
-    * wholesale. */
+    * (bigram, unigram, rebuilt, stateDir). */
   private[queries] def loadOrBuildLmState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Boolean, String) = {
     import s.implicits._
@@ -2383,39 +2376,21 @@ object TextOps extends Registry {
     // passed the contract
     val key = s"v2|$src|${Tables.sourceStamp(src)}" +
       s"|lm=bigram-ws-laplace|base=mod${IncDeltaMod}ne0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9h_lm_$tag")
-    val bigDir = java.nio.file.Paths.get(stateDir, "bigram")
-    val uniDir = java.nio.file.Paths.get(stateDir, "unigram")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(bigDir.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(uniDir.resolve("_SUCCESS"))
-    if (!valid) {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).toSeq.flatten.foreach(del)
-        f.delete(); ()
-      }
-      del(java.nio.file.Paths.get(stateDir).toFile)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(stateDir))
+    val st = Tables.store(s, "q9h_lm", key, "bigram", "unigram") { d =>
       val base = lmDocsWs(s, dir)
         .filter(pmod($"doc_id", lit(IncDeltaMod)) =!= 0)
       val (big, uni) = lmCountsOf(base)
-      big.write.mode("overwrite").parquet(bigDir.toString)
-      uni.write.mode("overwrite").parquet(uniDir.toString)
-      // contract (lossless merge), ON THE BUILD RUN ONLY (qb4's rule;
-      // pre-r20 every serve re-tokenized the full corpus to re-prove
-      // it): stored base + delta counts must equal a full-corpus
-      // rebuild bit-for-bit — additive count merge admits NO
-      // tolerance. Throws before the key file lands.
+      big.write.parquet(s"$d/bigram")
+      uni.write.parquet(s"$d/unigram")
+      // contract (lossless merge), ON THE BUILD RUN ONLY (qb4's rule):
+      // stored base + delta counts must equal a full-corpus rebuild
+      // bit-for-bit — additive count merge admits NO tolerance; a
+      // throw here publishes nothing.
       val delta = lmDocsWs(s, dir)
         .filter(pmod($"doc_id", lit(IncDeltaMod)) === 0)
       val (bigD, uniD) = lmCountsOf(delta)
       val (bigR, uniR) = lmCountsOf(lmDocsWs(s, dir))
-      val dBig = s.read.parquet(bigDir.toString)
+      val dBig = s.read.parquet(s"$d/bigram")
         .withColumnRenamed("c12", "c12_b")
         .join(bigD.withColumnRenamed("c12", "c12_d"), Seq("a", "b"), "full")
         .select($"a", $"b",
@@ -2424,7 +2399,7 @@ object TextOps extends Registry {
         .join(bigR.withColumnRenamed("c12", "c12_r"), Seq("a", "b"), "full")
         .agg(sum(abs(coalesce($"c12", lit(0L)) - coalesce($"c12_r", lit(0L)))))
         .collect().head
-      val dUni = s.read.parquet(uniDir.toString)
+      val dUni = s.read.parquet(s"$d/unigram")
         .withColumnRenamed("c1", "c1_b")
         .join(uniD.withColumnRenamed("c1", "c1_d"), Seq("w"), "full")
         .select($"w",
@@ -2436,10 +2411,9 @@ object TextOps extends Registry {
       require(!dBig.isNullAt(0) && dBig.getLong(0) == 0L &&
         !dUni.isNullAt(0) && dUni.getLong(0) == 0L,
         "q9h: merged LM tables diverged from a from-scratch rebuild")
-      java.nio.file.Files.writeString(keyFile, key)
     }
-    (s.read.parquet(bigDir.toString), s.read.parquet(uniDir.toString),
-      !valid, stateDir)
+    (s.read.parquet(s"${st.dir}/bigram"), s.read.parquet(s"${st.dir}/unigram"),
+      st.built, st.dir)
   }
 
   /** The maintained LM: stored base tables + delta-batch counts, merged
@@ -2885,27 +2859,15 @@ object TextOps extends Registry {
     val src = s"$dir/documents.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|tok=ws-lower|buckets=$PostingsBuckets"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val indexDir = Tables.persistentScratchDir(s"q99_postings_$tag")
-    val postDir = java.nio.file.Paths.get(indexDir, "postings")
-    val statsDir = java.nio.file.Paths.get(indexDir, "stats")
-    val keyFile = java.nio.file.Paths.get(indexDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(postDir.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(statsDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "q99_postings", key, "postings", "stats") { d =>
       val docs = tokenizedDocs(s, dir)
       docs.agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
-        .write.mode("overwrite").parquet(statsDir.toString)
-      postingsOf(docs)
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(postDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.parquet(s"$d/stats")
+      postingsOf(docs).write.partitionBy("term_bucket")
+        .parquet(s"$d/postings")
     }
-    (s.read.parquet(postDir.toString), s.read.parquet(statsDir.toString),
-      !valid, indexDir)
+    (s.read.parquet(s"${st.dir}/postings"), s.read.parquet(s"${st.dir}/stats"),
+      st.built, st.dir)
   }
 
   /** The (doc_id, ws, dl) tokenization every BM25 form shares. */
@@ -2967,9 +2929,6 @@ object TextOps extends Registry {
   // exactly maintainable this way because every stored quantity is a
   // per-doc row or an additive scalar: df/idf are DERIVED at serve time
   // from the merged postings, so no stored statistic goes stale.
-  // Torn-write rule (shared with q99/q4b): the key file is written
-  // LAST; any interruption leaves a key mismatch and the next call
-  // discards the partial state wholesale.
   // ------------------------------------------------------------------
   val IncDeltaMod = 10
 
@@ -2983,34 +2942,15 @@ object TextOps extends Registry {
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|tok=ws-lower|buckets=$PostingsBuckets" +
       s"|base=mod${IncDeltaMod}ne0|applied=mod${IncDeltaMod}eq0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val indexDir = Tables.persistentScratchDir(s"q9b_postings_$tag")
-    val postDir = java.nio.file.Paths.get(indexDir, "postings")
-    val statsDir = java.nio.file.Paths.get(indexDir, "stats")
-    val keyFile = java.nio.file.Paths.get(indexDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(postDir.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(statsDir.resolve("_SUCCESS"))
-    if (!valid) {
-      // discard any torn partial state wholesale (the append below is
-      // NOT idempotent, so a half-applied delta must never be resumed)
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).toSeq.flatten.foreach(del)
-        f.delete(); ()
-      }
-      del(java.nio.file.Paths.get(indexDir).toFile)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
-
+    val st = Tables.store(s, "q9b_postings", key, "postings", "stats") { tmp =>
+      val postDir = s"$tmp/postings"
+      val statsDir = s"$tmp/stats"
       // 1. "yesterday": the stored base index
       val base = tokenizedDocs(s, dir)
         .filter(pmod($"doc_id", lit(IncDeltaMod)) =!= 0)
       base.agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
-        .write.mode("overwrite").parquet(statsDir.toString)
-      postingsOf(base)
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(postDir.toString)
+        .write.parquet(statsDir)
+      postingsOf(base).write.partitionBy("term_bucket").parquet(postDir)
 
       // 2. "today": the incremental step — ONLY the delta is tokenized.
       // Postings append into the existing bucket directories; stats
@@ -3018,20 +2958,17 @@ object TextOps extends Registry {
       val delta = tokenizedDocs(s, dir)
         .filter(pmod($"doc_id", lit(IncDeltaMod)) === 0)
       postingsOf(delta)
-        .write.mode("append").partitionBy("term_bucket")
-        .parquet(postDir.toString)
-      val stored = s.read.parquet(statsDir.toString).collect().head
+        .write.mode("append").partitionBy("term_bucket").parquet(postDir)
+      val stored = s.read.parquet(statsDir).collect().head
       val d = delta.agg(count(lit(1)).cast("long"), sum($"dl")).collect().head
       Seq((stored.getLong(0) + d.getLong(0),
           (if (stored.isNullAt(1)) 0L else stored.getLong(1)) +
             (if (d.isNullAt(1)) 0L else d.getLong(1))))
         .toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").parquet(statsDir.toString)
-
-      java.nio.file.Files.writeString(keyFile, key)
+        .write.mode("overwrite").parquet(statsDir)
     }
-    (s.read.parquet(postDir.toString), s.read.parquet(statsDir.toString),
-      !valid, indexDir)
+    (s.read.parquet(s"${st.dir}/postings"), s.read.parquet(s"${st.dir}/stats"),
+      st.built, st.dir)
   }
 
   /** q9b serve — exposed for the spec's plan assertions. */
@@ -3067,7 +3004,7 @@ object TextOps extends Registry {
     * built before the takedown arrived), the tombstone list, live
     * stats (decremented at apply time), and the compacted postings.
     * Returns (postings, compacted, statsLive, tombstones, rebuilt,
-    * stateDir). Torn-write rule shared with q99/q9b: key file last. */
+    * stateDir). */
   private[queries] def loadOrBuildTombstonedPostings(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame, DataFrame, Boolean,
       String) = {
@@ -3079,46 +3016,26 @@ object TextOps extends Registry {
     val key = s"v2|$src|${Tables.sourceStamp(src)}" +
       s"|tok=ws-lower|buckets=$PostingsBuckets" +
       s"|tomb=mod${TombMod}eq$TombRem"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"q9u_postings_$tag")
-    val postDir = java.nio.file.Paths.get(stateDir, "postings")
-    val compDir = java.nio.file.Paths.get(stateDir, "compacted")
-    val statsDir = java.nio.file.Paths.get(stateDir, "stats_live")
-    val tombDir = java.nio.file.Paths.get(stateDir, "tombstones")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      Seq(postDir, compDir, statsDir, tombDir)
-        .forall(d => java.nio.file.Files.exists(d.resolve("_SUCCESS")))
-    if (!valid) {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).toSeq.flatten.foreach(del)
-        f.delete(); ()
-      }
-      del(java.nio.file.Paths.get(stateDir).toFile)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(stateDir))
-
+    val parts = Seq("postings", "compacted", "stats_live", "tombstones")
+    val st = Tables.store(s, "q9u_postings", key, parts: _*) { d =>
+      val Seq(postDir, compDir, statsDir, tombDir) = parts.map(p => s"$d/$p")
       // 1. "last month": the index was built over the full corpus —
       // the one and only corpus tokenization in this state's life
       val docs = tokenizedDocs(s, dir)
-      postingsOf(docs)
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(postDir.toString)
+      postingsOf(docs).write.partitionBy("term_bucket").parquet(postDir)
       val full = docs.agg(count(lit(1)).cast("long").as("n_docs"),
         sum($"dl").as("sum_dl")).collect().head
 
       // 2. "today": the takedown list arrives (synthesized here by the
       // tombstone predicate over the INDEX's own doc ids — production
       // receives it as input; the corpus is not consulted)
-      val postStored = s.read.parquet(postDir.toString)
+      val postStored = s.read.parquet(postDir)
       postStored
         .filter(pmod($"doc_id", lit(TombMod)) === TombRem)
         .select($"doc_id", $"dl").distinct()
         .repartition(1)
-        .write.mode("overwrite").parquet(tombDir.toString)
-      val tomb = s.read.parquet(tombDir.toString)
+        .write.parquet(tombDir)
+      val tomb = s.read.parquet(tombDir)
 
       // 3. stats decrement from the tombstone rows alone — two scalars
       val dead = tomb.agg(count(lit(1)).cast("long"), sum($"dl"))
@@ -3127,28 +3044,27 @@ object TextOps extends Registry {
           (if (full.isNullAt(1)) 0L else full.getLong(1)) -
             (if (dead.isNullAt(1)) 0L else dead.getLong(1))))
         .toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").parquet(statsDir.toString)
+        .write.parquet(statsDir)
 
       // 4. compaction: physical deletion, bucket layout preserved —
       // reads stored postings, never the corpus
       postStored
         .join(tomb.select($"doc_id"), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(compDir.toString)
+        .write.partitionBy("term_bucket").parquet(compDir)
 
       // 5. contracts, ON THE BUILD RUN ONLY (qb4's documented rule —
       // the one execution that already pays a full corpus pass is
       // where merge≡rebuild belongs; r19 and earlier re-ran these on
       // EVERY serve, re-tokenizing the corpus per invocation). A
-      // failed contract throws BEFORE the key file lands, so a store
-      // that exists is a store whose contracts held.
+      // failed contract publishes nothing, so a store that exists is a
+      // store whose contracts held.
       //
       // contract 1: the compacted index ≡ postings rebuilt from the
       // live corpus — the purge dropped exactly the dead rows.
       val rebuilt = postingsOf(docs
         .filter(pmod($"doc_id", lit(TombMod)) =!= TombRem))
         .localCheckpoint(true)
-      val compacted = s.read.parquet(compDir.toString)
+      val compacted = s.read.parquet(compDir)
       val postDiff = compacted
         .select($"doc_id", $"term", $"tf", $"dl", $"term_bucket")
         .unionAll(rebuilt
@@ -3165,16 +3081,14 @@ object TextOps extends Registry {
         .select($"doc_id", $"dl").distinct()
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum($"dl").as("sum_dl")).collect().head
-      val storedStats = s.read.parquet(statsDir.toString).collect().head
+      val storedStats = s.read.parquet(statsDir).collect().head
       require(liveStats.getLong(0) == storedStats.getLong(0) &&
         liveStats.getLong(1) == storedStats.getLong(1),
         "q9u: decremented stats diverged from live-corpus recompute")
-
-      java.nio.file.Files.writeString(keyFile, key)
     }
-    (s.read.parquet(postDir.toString), s.read.parquet(compDir.toString),
-      s.read.parquet(statsDir.toString), s.read.parquet(tombDir.toString),
-      !valid, stateDir)
+    val Seq(post, comp, stats, tomb) =
+      parts.map(p => s.read.parquet(s"${st.dir}/$p"))
+    (post, comp, stats, tomb, st.built, st.dir)
   }
 
   /** The q9u masked serve — bucket-pruned postings, tombstones anti-
@@ -3336,34 +3250,21 @@ object TextOps extends Registry {
     * trajectory (≤ rounds rows) and the fitted (word, ntok) vocabulary
     * (vocab-sized), keyed on corpus stamp × round count; the q97/q9g
     * oracles still unroll training from scratch, so a stale store
-    * hash-mismatches. Torn-write rule: key file last. */
+    * hash-mismatches. */
   private[queries] def loadOrBuildBpeState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     import s.implicits._
     val src = s"$dir/documents.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}|bpe|rounds=$BpeRounds"
-    val tag = md5Hex(key).take(12)
-    val stateDir = Tables.persistentScratchDir(s"q97_bpe_$tag")
-    val trajDir = java.nio.file.Paths.get(stateDir, "traj")
-    val vocabDir = java.nio.file.Paths.get(stateDir, "vocab")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(trajDir.resolve("_SUCCESS")) &&
-      java.nio.file.Files.exists(vocabDir.resolve("_SUCCESS"))
-    if (!valid) {
-      Tables.deleteRecursively(java.nio.file.Paths.get(stateDir).toFile)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(stateDir))
+    val st = Tables.store(s, "q97_bpe", key, "traj", "vocab") { d =>
       val (rows, vocab) = bpeFit(s, dir)
       rows.toDF("round", "token_a", "token_b", "pair_n",
           "vocab_tokens_after", "corpus_tokens_after")
-        .coalesce(1).write.mode("overwrite").parquet(trajDir.toString)
+        .coalesce(1).write.parquet(s"$d/traj")
       vocab.select($"word", size($"tokens").cast("long").as("ntok"))
-        .coalesce(1).write.mode("overwrite").parquet(vocabDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .coalesce(1).write.parquet(s"$d/vocab")
     }
-    (s.read.parquet(trajDir.toString), s.read.parquet(vocabDir.toString))
+    (s.read.parquet(s"${st.dir}/traj"), s.read.parquet(s"${st.dir}/vocab"))
   }
 
   /** The shared BPE training loop: returns the per-round trajectory AND
@@ -3709,21 +3610,12 @@ object TextOps extends Registry {
     val src = s"$dir/documents.parquet"
     val key = s"v1|$src|${Tables.sourceStamp(src)}" +
       s"|kmv-base|k=$KmvK|base=mod${KmvDeltaMod}ne0"
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stateDir = Tables.persistentScratchDir(s"qb9_kmv_$tag")
-    val outDir = java.nio.file.Paths.get(stateDir, "sketches")
-    val keyFile = java.nio.file.Paths.get(stateDir, "_graft_index_key")
-    val valid = java.nio.file.Files.exists(keyFile) &&
-      java.nio.file.Files.readString(keyFile) == key &&
-      java.nio.file.Files.exists(outDir.resolve("_SUCCESS"))
-    if (!valid) {
+    val st = Tables.store(s, "qb9_kmv", key, "sketches") { d =>
       kmvSketchesOf(table(s, dir, "documents")
           .filter(pmod(col("doc_id"), lit(KmvDeltaMod)) =!= 0))
-        .coalesce(1).write.mode("overwrite").parquet(outDir.toString)
-      java.nio.file.Files.writeString(keyFile, key)
+        .coalesce(1).write.parquet(s"$d/sketches")
     }
-    (s.read.parquet(outDir.toString), !valid)
+    (s.read.parquet(s"${st.dir}/sketches"), st.built)
   }
 
   /** Position-weighted checksum over a sorted sketch column: pins

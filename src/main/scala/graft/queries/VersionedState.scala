@@ -60,7 +60,7 @@ object VersionedState {
   /** Commit a new version: `write(versionDir)` materializes the
     * state's parquet table(s) under a fresh directory, the applied
     * ledger is carried forward plus `batchId`, and `CURRENT` swaps
-    * atomically. Superseded versions are then best-effort deleted. */
+    * atomically. Superseded versions are then deleted. */
   def commit(stateDir: String, batchId: Long)(write: Path => Unit): Unit = {
     Files.createDirectories(Paths.get(stateDir))
     val prev = current(stateDir)
@@ -88,7 +88,7 @@ object VersionedState {
     eachEntry(Paths.get(stateDir)) { f =>
       val n = f.getFileName.toString
       if (n.startsWith("v-") && n != vname && Files.isDirectory(f))
-        deleteRecursively(f)
+        Tables.deleteRecursively(f.toFile)
     }
   }
 
@@ -99,10 +99,5 @@ object VersionedState {
     val s = Files.list(dir)
     try { val it = s.iterator(); while (it.hasNext) f(it.next()) }
     finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) eachEntry(p)(deleteRecursively)
-    Files.deleteIfExists(p); ()
   }
 }

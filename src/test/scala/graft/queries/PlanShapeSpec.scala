@@ -21,6 +21,22 @@ class PlanShapeSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Every registered query (minus `exempt` and the eager defs) whose
+    * optimized plan satisfies `bad`. A query that fails to construct or
+    * plan is reported with its exception message and the sweep goes on,
+    * so one broken query cannot hide the rest. */
+  private def registryOffenders(exempt: Set[String])(
+      bad: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Boolean)
+      : Seq[String] =
+    graft.SparkEntry.allDefs
+      .filterNot(d => exempt(d.name) || PlanShapeSpec.EagerDefs(d.name))
+      .flatMap { d =>
+        scala.util.Try(d.fn(spark, sfDir).queryExecution.optimizedPlan) match {
+          case scala.util.Success(lp) => if (bad(lp)) Seq(d.name) else Nil
+          case scala.util.Failure(e) => Seq(s"${d.name} (failed: ${e.getMessage})")
+        }
+      }
+
   private def plan(name: String): String =
     graft.SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(FormattedMode)
@@ -304,18 +320,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // histogram aggregate (|distinct integer scores| rows — model-
     // sized by construction), not the corpus
     val exempt = Set("q1c_window_analytics", "qb5_classifier_auc")
-    val eager = PlanShapeSpec.EagerDefs
     def hasLimitBelow(p: LogicalPlan): Boolean =
       p.collectFirst { case _: GlobalLimit => (); case _: LocalLimit => () }.nonEmpty
-    val offenders = graft.SparkEntry.allDefs
-      .filterNot(d => exempt(d.name) || eager(d.name))
-      .flatMap { d =>
-        val lp = d.fn(spark, sfDir).queryExecution.optimizedPlan
-        lp.collect {
-          case w: LWindow if w.partitionSpec.isEmpty && !hasLimitBelow(w.child) =>
-            d.name
-        }
-      }.distinct
+    val offenders = registryOffenders(exempt)(_.exists {
+      case w: LWindow => w.partitionSpec.isEmpty && !hasLimitBelow(w.child)
+      case _ => false
+    })
     assert(offenders.isEmpty,
       s"unpartitioned, unbounded Window in: ${offenders.mkString(", ")}")
   }
@@ -330,17 +340,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // decoded-output guard from reintroducing the double decode.
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     val codecPrefixes = Seq("Wav", "Bmp", "Avi", "Png", "Jpeg")
-    val offenders = graft.SparkEntry.allDefs
-      .filterNot(d => PlanShapeSpec.EagerDefs(d.name))
-      .flatMap { d =>
-        val lp = d.fn(spark, sfDir).queryExecution.optimizedPlan
-        lp.collect {
-          case f: Filter if f.condition.exists { e =>
-            e.getClass.getName.startsWith("graft.expressions.") &&
-              codecPrefixes.exists(e.getClass.getSimpleName.startsWith)
-          } => d.name
-        }
-      }.distinct
+    val offenders = registryOffenders(Set.empty)(_.exists {
+      case f: Filter => f.condition.exists { e =>
+        e.getClass.getName.startsWith("graft.expressions.") &&
+          codecPrefixes.exists(e.getClass.getSimpleName.startsWith)
+      }
+      case _ => false
+    })
     assert(offenders.isEmpty,
       s"codec decode inside a Filter in: ${offenders.mkString(", ")}")
   }
