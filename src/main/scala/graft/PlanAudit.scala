@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Writes `PLANS.md`: the formatted physical plan of each headline
   * query, so SCALING.md's claims (pushdown, broadcast, partial agg,
@@ -142,20 +143,30 @@ object PlanAudit {
     * every eager (local)checkpoint its construction executes — the
     * real work a checkpoint-terminated query would otherwise hide
     * from the audit (r14 blind spot: qb4's PLANS.md entry was a bare
-    * `Scan ExistingRDD`). Returns (df, capturedPlans, oldest first).
-    * The listener bus is async, so the capture waits until no new
-    * plan has arrived for 300 ms. */
+    * `Scan ExistingRDD`). Returns (df, capturedPlans, oldest first). */
   def buildCapturing(spark: SparkSession,
       build: () => org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Seq[String]) = {
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val (df, captured) = buildCapturingExecutions(spark, build)
+    (df, captured.map(_.explainString(
+      org.apache.spark.sql.execution.FormattedMode)))
+  }
+
+  /** [[buildCapturing]] returning the captured `QueryExecution`s, for
+    * checks on plan nodes. The listener bus is async, so the capture
+    * waits until no new plan has arrived for 300 ms. */
+  def buildCapturingExecutions(spark: SparkSession,
+      build: () => org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame,
+        Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit =
         if (funcName == "localCheckpoint" || funcName == "checkpoint")
-          captured.add(qe.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
+          captured.add(qe)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
@@ -171,7 +182,7 @@ object PlanAudit {
         val n = captured.size
         if (n == last) stable += 1 else { stable = 0; last = n }
       }
-      (df, captured.toArray(Array.empty[String]).toSeq)
+      (df, captured.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
 

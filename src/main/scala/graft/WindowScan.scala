@@ -19,18 +19,17 @@ object WindowScan {
           "RocksDBStateStoreProvider")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // windowspecdefinition whose first argument is already the ORDER
-    // column (no partition columns in front)
-    val bare = """windowspecdefinition\([^,)]+ (ASC|DESC)""".r
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val (df, captured) = PlanAudit.buildCapturing(spark,
+        val (df, captured) = PlanAudit.buildCapturingExecutions(spark,
           () => fn(spark, sfDir))
-        val inResult = df.queryExecution.optimizedPlan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-              if w.partitionSpec.isEmpty => w
-        }.size
-        val inCaptured = captured.count(p => bare.findFirstIn(p).isDefined)
+        def bare(qe: org.apache.spark.sql.execution.QueryExecution): Int =
+          qe.optimizedPlan.collect {
+            case w: org.apache.spark.sql.catalyst.plans.logical.Window
+                if w.partitionSpec.isEmpty => w
+          }.size
+        val inResult = bare(df.queryExecution)
+        val inCaptured = captured.count(bare(_) > 0)
         if (inResult > 0 || inCaptured > 0)
           println(s"[windowscan] $name result=$inResult captured=$inCaptured")
       } catch {

@@ -219,15 +219,11 @@ object Gtex {
   // Group: J3 intersection (stripped SAMPID ∩ aliquot ids) + A5
   // (gtex_fhirizer.py:87-105, 377-395)
   // ------------------------------------------------------------------
-  def group(sampleAttrs: DataFrame, samples: DataFrame): DataFrame = {
-    val stripped = sampleAttrs
-      .select(Fns.sampidKey(col("SAMPID")).as("sample_id")).distinct()
-    val aliquots = samples.select(col("aliquotId").as("sample_id")).distinct()
-    stripped.join(aliquots, Seq("sample_id"), "left_semi")
-      .select(concat(lit("Specimen/"),
-        mintFor("Specimen", col("sample_id"))).as("ref"))
-      .agg(sort_array(collect_list(struct(struct(col("ref").as("reference"))
-        .as("entity")))).as("member"))
+  def group(sampleAttrs: DataFrame, samples: DataFrame): DataFrame =
+    Etl.groupMembers(
+      sampleAttrs.select(Fns.sampidKey(col("SAMPID")).as("sample_id")),
+      samples.select(col("aliquotId").as("sample_id")))(id =>
+      concat(lit("Specimen/"), mintFor("Specimen", id)))
       .select(
         lit("Group").as("resourceType"),
         lit(GroupId).as("id"),
@@ -236,5 +232,4 @@ object Gtex {
         lit("definitional").as("membership"),
         lit("specimen").as("type"),
         col("member"))
-  }
 }

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   * reproduced deliberately; SURVEY §7.5 item 1).
   *
   * Scale: each transform is one narrow `select` over the scan (no
-  * shuffle); the Group build is a semi-join on sample id plus a bounded
-  * single-group collect_list (≤ tens of MB at any realistic membership,
-  * SURVEY §3); docref dedup (A1) is one hash-shuffle on id.
+  * shuffle). The Group build ([[Etl.groupMembers]]) and the docref dedup
+  * (A1) each take one single-partition exchange, sized by the one
+  * output they feed: the Group row's member array (≤ tens of MB at any
+  * realistic membership, SURVEY §3) and the DocumentReference file.
   */
 object OneKg {
 
@@ -196,10 +197,13 @@ object OneKg {
             fmt.as("code"), fmt.as("display")).as("valueCoding"))).as("profile")))
           .as("content"),
         col("pos"))
-    // A1 last-wins dedup by id ({doc.id: doc}.values(), :248)
+    // A1 last-wins dedup by id ({doc.id: doc}.values(), :248), in the
+    // one partition of a single exchange: the window needs no hash
+    // exchange on id and the listing order needs no range sort
     val w = Window.partitionBy(col("id")).orderBy(col("pos").desc)
-    docs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .orderBy(col("pos")).drop("pos", "rn")
+    docs.repartition(1)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .sortWithinPartitions(col("pos")).drop("pos", "rn")
   }
 
   // ------------------------------------------------------------------
@@ -208,7 +212,9 @@ object OneKg {
   // ------------------------------------------------------------------
 
   /** S7: identifier values from Specimen.ndjson whose system matches
-    * (document_references.py:200-205); malformed lines dropped. */
+    * (document_references.py:200-205); malformed lines dropped. An id
+    * repeats once per matching identifier: every caller consumes the
+    * ids as a set ([[group]], or the right side of a semi/anti join). */
   def specimenSampleIds(spark: SparkSession, specimenNdjson: String): DataFrame = {
     import spark.implicits._
     spark.read
@@ -216,21 +222,16 @@ object OneKg {
       .option("mode", "DROPMALFORMED").json(specimenNdjson)
       .select(explode($"identifier").as("ident"))
       .filter($"ident.system" === TechSystem && $"ident.value".isNotNull)
-      .select($"ident.value".as("sample_id")).distinct()
+      .select($"ident.value".as("sample_id"))
   }
 
   /** The Group resource: header ids ∩ specimen ids → member array.
     * Members are sorted for determinism — the reference iterates a
     * Python set whose order is hash-seed-dependent, so order is not
     * part of the contract (golden comparison is set-based). */
-  def group(spark: SparkSession, headerIds: DataFrame, specimenIds: DataFrame): DataFrame = {
-    val found = headerIds.distinct()
-      .join(specimenIds, Seq("sample_id"), "left_semi")
-    found
-      .select(concat(lit("Specimen/"),
-        mintFor("Specimen", col("sample_id"))).as("ref"))
-      .agg(sort_array(collect_list(struct(struct(col("ref").as("reference"))
-        .as("entity")))).as("member"))
+  def group(spark: SparkSession, headerIds: DataFrame, specimenIds: DataFrame): DataFrame =
+    Etl.groupMembers(headerIds, specimenIds)(id =>
+      concat(lit("Specimen/"), mintFor("Specimen", id)))
       .select(
         lit("Group").as("resourceType"),
         lit(GroupId).as("id"),
@@ -239,7 +240,6 @@ object OneKg {
         lit("specimen").as("type"),
         lit("definitional").as("membership"),
         col("member"))
-  }
 
   /** E1 end-to-end: transform all fixtures and write the six NDJSON
     * files (K1/K2 for the per-row types, K3 create_or_extend for

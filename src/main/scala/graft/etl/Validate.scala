@@ -99,22 +99,26 @@ object Validate {
     .fromDDL("ARRAY<STRUCT<value STRING>>")
 
   /** The summary the reference CLI prints: `{type: count}` of valid
-    * resources (README.md:35,38). */
+    * resources (README.md:35,38), ordered by type. */
   def summary(spark: SparkSession, dir: String): DataFrame =
-    validateDir(spark, dir).filter(col("ok"))
+    byType(validateDir(spark, dir).filter(col("ok"))
       .groupBy(col("resource_type"))
-      .agg(count(lit(1)).as("n_valid"))
-      .orderBy(col("resource_type"))
+      .agg(count(lit(1)).as("n_valid")))
+
+  /** Order a per-type aggregate (one row per resource type) by type: its
+    * partitions are coalesced into one and sorted there, which needs no
+    * range exchange and so no sampling job. */
+  private def byType(perType: DataFrame): DataFrame =
+    perType.coalesce(1).sortWithinPartitions(col("resource_type"))
 
   /** Like [[summary]] but with id extremes per type — the e2e-pipeline
     * gate shape (counts alone can't catch a minting regression; min/max
     * id pin the uuid5 chain of the engine's own written output). */
   def profile(spark: SparkSession, dir: String): DataFrame =
-    validateDir(spark, dir).filter(col("ok"))
+    byType(validateDir(spark, dir).filter(col("ok"))
       .groupBy(col("resource_type"))
       .agg(count(lit(1)).as("n_valid"),
-        min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-      .orderBy(col("resource_type"))
+        min(col("id")).as("min_id"), max(col("id")).as("max_id")))
 
   /** Per-line quarantine report (path:line-snippet exception analogue),
     * in scan order: a file's lines stay in line order, but files may

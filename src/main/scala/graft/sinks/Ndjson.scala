@@ -13,19 +13,33 @@ import org.apache.spark.sql.functions._
   * empty-pruning for the null case; empty structs are never constructed
   * upstream (guarantee-by-construction, SURVEY §7.5 item 3).
   *
-  * Scale note: golden-compat single-file output forces coalesce(1) at
-  * the very end — the transform upstream stays parallel and only the
-  * final line-writing serializes, same shape as any "collect results to
-  * one artifact" sink. For engine-internal storage the parquet sink
-  * (K4) is the scalable path; this sink exists for reference-format
-  * interchange.
+  * Lines are serialized inside Catalyst ([[jsonLines]]): the JSON
+  * generator writes straight from the internal row, with no
+  * `Dataset.toJSON` round trip through external `Row`s.
+  *
+  * Scale note: golden-compat single-file output forces one write task.
+  * [[write]] ends in `coalesce(1)`, which is narrow, so its whole
+  * upstream (scan, transform, serialization) runs inside that one task;
+  * [[createOrExtend]] gathers its lines with one single-partition
+  * exchange (its plan is described there). Either way the serial part
+  * handles the rows of the one file it writes, as any "collect results
+  * to one artifact" sink does. For engine-internal storage the parquet
+  * sink (K4) is the scalable path; this sink exists for
+  * reference-format interchange.
   */
 object Ndjson {
 
   /** K1/K2: overwrite-write df as `<dir>/<resourceType>.ndjson`. */
   def write(df: DataFrame, dir: String, resourceType: String): Unit =
-    writeSingleFile(df.toJSON.toDF("line").coalesce(1),
+    writeSingleFile(jsonLines(df).coalesce(1),
       Paths.get(dir, s"$resourceType.ndjson"))
+
+  /** One `line` column holding each row of `df` as a JSON object: the
+    * bytes `df.toJSON` produces (same default options, so null fields
+    * are dropped), built by `to_json` over a struct of every column. */
+  private def jsonLines(df: DataFrame): DataFrame =
+    df.select(to_json(struct(df.columns.toSeq.map(c =>
+      col("`" + c.replace("`", "``") + "`")): _*)).as("line"))
 
   /** Write a one-partition frame of lines as `target`: Spark writes into
     * a fresh temp dir, its one part file is moved over `target`, and the
@@ -56,13 +70,14 @@ object Ndjson {
     *
     * Plan: every line gets a position (`pos`: old lines in file order,
     * new lines after all of them) and a precedence that is unique per
-    * row. ONE `groupBy(id)` aggregate picks `max_by(line, precedence)`
-    * as the id's winner and `min(pos)` as its first position, so the
-    * winner is deterministic and the only id shuffle is the aggregate's.
-    * `repartition(1).sortWithinPartitions(first_pos)` then orders the
-    * single output partition without a global sort's range-partitioning
-    * sample job. NdjsonSpec pins the plan: one aggregate keyed on id, no
-    * `RangePartitioning` exchange.
+    * row. ONE single-partition exchange (`repartition(1)`) gathers the
+    * lines; in that partition a `groupBy(id)` aggregate picks
+    * `max_by(line, precedence)` as the id's winner and `min(pos)` as its
+    * first position, and `sortWithinPartitions(first_pos)` restores the
+    * file order. There is no hash exchange on id and no global sort's
+    * range-partitioning sample job. NdjsonSpec pins the plan: one
+    * aggregate keyed on id, exactly one shuffle exchange, neither
+    * hash- nor range-partitioned.
     */
   def createOrExtend(spark: SparkSession, newDf: DataFrame, dir: String,
       resourceType: String, updateExisting: Boolean = false): Unit = {
@@ -71,7 +86,7 @@ object Ndjson {
 
     // positions: old lines get their file order; new lines sort after all
     // old lines (Python dict preserves first-insertion position)
-    val newLines = newDf.toJSON.toDF("line")
+    val newLines = jsonLines(newDf)
       .withColumn("pos", monotonically_increasing_id() + lit(1L << 45))
       .withColumn("src", lit(1))
     val all =
@@ -91,9 +106,9 @@ object Ndjson {
     val resolved = all
       .withColumn("id", get_json_object($"line", "$.id"))
       .filter($"id".isNotNull)
+      .repartition(1)
       .groupBy($"id")
       .agg(max_by($"line", precedence).as("line"), min($"pos").as("first_pos"))
-      .repartition(1)
       .sortWithinPartitions($"first_pos")
       .select($"line")
     writeSingleFile(resolved, path)

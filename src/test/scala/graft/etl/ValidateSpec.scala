@@ -4,13 +4,17 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   AttributeSet, ExprId, Expression, GetJsonObject, JsonToStructs, JsonTuple}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 /** V3 parity with the reference CLI (`README.md:35,38`) plus the full
   * end-to-end jobs: transform fixtures → NDJSON sinks → validate the
   * written directory → reference count tables. */
-class ValidateSpec extends AnyFunSuite {
+class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -155,5 +159,24 @@ class ValidateSpec extends AnyFunSuite {
       "Patient.ndjson" -> (1L, Nil),
       "ResearchSubject.ndjson" -> (0L, Seq(planLine.take(80))),
       "Specimen.ndjson" -> (0L, Seq(planLine.take(80), "oops", "nope"))))
+  }
+
+  test("summary and profile: ordered by type with no range exchange") {
+    val dir = planDir()
+    Seq("Observation", "Group", "DocumentReference").foreach(t =>
+      Files.write(Paths.get(dir, s"$t.ndjson"),
+        (planLine.replace("Patient", t) + "\n").getBytes))
+    for ((name, df) <- Seq("summary" -> Validate.summary(spark, dir),
+                           "profile" -> Validate.profile(spark, dir))) {
+      val types = df.collect().map(_.getString(0)).toSeq
+      assert(types == Seq("DocumentReference", "Group", "Observation", "Patient"),
+        s"$name row order")
+      val plan = df.queryExecution.executedPlan
+      assert(collect(plan) {
+        case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.isEmpty, s"$name: range exchange:\n$plan")
+      assert(collect(plan) { case s: SortExec if s.global => s }.isEmpty,
+        s"$name: global sort:\n$plan")
+    }
   }
 }

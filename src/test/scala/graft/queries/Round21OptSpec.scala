@@ -34,23 +34,21 @@ class Round21OptSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
-  /** A windowspecdefinition whose FIRST argument is already the order
-    * column (i.e. no partition columns in front) — the formatted-plan
-    * signature of an unpartitioned window. */
-  private val bareWindow = """windowspecdefinition\([^,)]+ (ASC|DESC)""".r
-
   test("q9t: the materialized quantile plan windows by bucket, never " +
     "by nothing (the r20 single-partition cumsum is gone)") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // q9t's result frame is eagerly localCheckpoint'ed, so its OWN
     // plan is a truncated LogicalRDD — the real shape is in the plans
     // materialized during construction (the PlanAudit capture).
-    val (_, captured) = graft.PlanAudit.buildCapturing(spark,
+    val (_, captured) = graft.PlanAudit.buildCapturingExecutions(spark,
       () => Relational.quantileIncremental(spark, sfDir))
-    val offender = captured.find(p => bareWindow.findFirstIn(p).isDefined)
-    assert(offender.isEmpty,
+    val wins = captured.flatMap(_.optimizedPlan.collect { case w: LWindow => w })
+    assert(wins.nonEmpty, "q9t materialized no window")
+    val bare = wins.filter(_.partitionSpec.isEmpty)
+    assert(bare.isEmpty,
       "q9t materialized a window with an empty partition spec:\n" +
-        offender.getOrElse("").linesIterator.take(25).mkString("\n"))
-    assert(captured.exists(_.contains("windowspecdefinition(cb#")),
+        bare.map(_.toString).mkString("\n"))
+    assert(wins.exists(_.partitionSpec.exists(_.references.exists(_.name == "cb"))),
       "the exact arm's cumsum must window by the cents bucket")
   }
 

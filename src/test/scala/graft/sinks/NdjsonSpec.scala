@@ -1,9 +1,10 @@
 package graft.sinks
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeserializeToObject,
+  LogicalPlan, MapPartitions, SerializeFromObject}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommand
@@ -32,7 +33,7 @@ class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def readLines(dir: String, t: String): Seq[String] = {
     val p = Paths.get(dir, s"$t.ndjson")
-    scala.io.Source.fromFile(p.toFile).getLines().toSeq
+    scala.io.Source.fromFile(p.toFile, "UTF-8").getLines().toSeq
   }
 
   private def tmpDir(): String =
@@ -177,13 +178,18 @@ class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       existing.updated(7, s"""{"id":"${ids(7)}","v":5}""") :+ """{"id":"new","v":1}""")
   }
 
-  test("K3 plan pin: one aggregate keyed on id, no RangePartitioning exchange") {
+  /** The write plan of an upsert into an existing file. */
+  private def upsertPlan(): QueryExecution = {
     val dir = tmpDir()
     Ndjson.createOrExtend(spark, df("a" -> 1, "b" -> 2), dir, "Observation")
     val plans = writePlans(
       Ndjson.createOrExtend(spark, df("b" -> 3, "c" -> 4), dir, "Observation"))
     assert(plans.size == 1, s"expected one write, saw ${plans.size}")
-    val qe = plans.head
+    plans.head
+  }
+
+  test("K3 plan pin: one aggregate keyed on id, no RangePartitioning exchange") {
+    val qe = upsertPlan()
     val aggs = qe.optimizedPlan.collect { case a: Aggregate => a }
     assert(aggs.size == 1, s"expected one aggregate:\n${qe.optimizedPlan}")
     assert(aggs.head.groupingExpressions.map(_.references.map(_.name).toSeq) ==
@@ -192,5 +198,71 @@ class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
     assert(ranges.isEmpty, s"range-partitioned exchange:\n${qe.executedPlan}")
+  }
+
+  test("K3 plan pin: exactly one shuffle exchange, not hash-partitioned on id") {
+    val qe = upsertPlan()
+    val exchanges = collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"expected one exchange:\n${qe.executedPlan}")
+    assert(!exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning],
+      s"hash exchange on id:\n${qe.executedPlan}")
+  }
+
+  /** Rows covering what JSON serialization must get right: top-level and
+    * nested nulls, empty arrays, arrays of structs (with null elements
+    * and null fields), unicode and escapes, long/double/boolean, and
+    * column names holding a dot, a space and a backtick. */
+  private def awkward() = {
+    import org.apache.spark.sql.types._
+    val item = StructType.fromDDL("code STRING, n LONG")
+    val schema = new StructType()
+      .add("id", StringType)
+      .add("a.b", LongType)
+      .add("c d", DoubleType)
+      .add("e`f", BooleanType)
+      .add("nested", new StructType()
+        .add("s", StringType).add("xs", ArrayType(StringType))
+        .add("inner", item))
+      .add("items", ArrayType(item))
+      .add("tags", ArrayType(StringType))
+    val rows = Seq(
+      Row("r1", 1L, 1.5, true, Row("x", Seq("p", null), Row("c", 2L)),
+        Seq(Row("a", 1L), null, Row(null, 3L)), Seq.empty[String]),
+      Row("r2", null, null, null, null, null, null),
+      Row("r3", Long.MaxValue, -0.0, false, Row(null, Seq.empty[String], null),
+        Seq.empty[Row], Seq("")),
+      Row("r4", Long.MinValue, 1e-7, true,
+        Row("\"q\" \\ \n\t\r\b\f \u0001 \u001f \u007f", null, Row(null, null)),
+        Seq(Row("é ✓ 日本 \uD83D\uDE00 \u2028", null)), Seq("</script>", "'")),
+      Row("r5", 0L, 1.0e300, false, Row("", Seq(""), Row("", 0L)),
+        Seq(Row("", 0L)), Seq(null, "z")))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
+  test("K1/K3 serialization: sink lines equal df.toJSON byte for byte") {
+    val d = awkward()
+    val want = d.toJSON.collect().toSeq
+    assert(want.size == 5 && want.exists(_.contains("a.b")))
+    val dir = tmpDir()
+    Ndjson.write(d, dir, "Thing")
+    assert(readLines(dir, "Thing") == want)
+    val up = tmpDir()
+    Ndjson.createOrExtend(spark, d, up, "Thing")
+    assert(readLines(up, "Thing") == want)
+  }
+
+  test("K1/K3 plan pin: lines are built without external Row objects") {
+    def objectNodes(p: LogicalPlan): Seq[LogicalPlan] = p.collect {
+      case n @ (_: DeserializeToObject | _: MapPartitions | _: SerializeFromObject) => n
+    }
+    val d = awkward()
+    val dir = tmpDir()
+    val plans = writePlans {
+      Ndjson.write(d, dir, "Thing")
+      Ndjson.createOrExtend(spark, d, dir, "Thing")
+    }
+    assert(plans.size == 2, s"expected two writes, saw ${plans.size}")
+    plans.foreach(qe => assert(objectNodes(qe.optimizedPlan).isEmpty,
+      s"object round trip in the sink plan:\n${qe.optimizedPlan}"))
   }
 }
