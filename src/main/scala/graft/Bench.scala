@@ -28,6 +28,12 @@ object Bench {
   val SuspectFactor = 2.5
   val SuspectFloorSec = 0.5
 
+  /** The committed per-query detail: `BENCH_DETAIL.json` in the working
+    * directory (the checkout root when run through sbt), so a run from a
+    * second checkout reads and writes that checkout's file. */
+  val DetailPath: String =
+    java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath.toString
+
   /** The policy predicates, pure so the spec can pin them without
     * racing real wall-clock on a possibly-loaded test box. */
   def slowVsCommitted(t: Double, committed: Option[Double]): Boolean =
@@ -279,7 +285,7 @@ object Bench {
     // whole-run co-tenancy each inflated query earns a rescue pass and
     // any that stay >2.5× committed are counted on the metric line so
     // a 1.3× readout self-explains.
-    val committed = loadCommittedMins("/root/repo/BENCH_DETAIL.json")
+    val committed = loadCommittedMins(DetailPath)
     val results = runSuite(spark, sfDir,
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.isEmpty || only(n) },
@@ -476,7 +482,7 @@ object Bench {
     // for every later full run (observed r20: a 2-query iteration run
     // left the next full bench with no reference to rescue against)
     if (only.isEmpty)
-      writeDetail("/root/repo/BENCH_DETAIL.json", results, loadAvg,
+      writeDetail(DetailPath, results, loadAvg,
         gcTotal, rssMb(), sfDir)
     println(diagLine(results))
     println(metricLine(results, baselinePin, loadAvg, gcTotal,

@@ -1,25 +1,33 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Locale
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-import scala.util.{Failure, Success, Try}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Shared ETL-job helpers. */
 object Etl {
 
-  /** Await EVERY future — success or failure — then rethrow the first
-    * failure. `Await(Future.sequence(...))` fails fast instead, which
-    * would return control (and the output directory) to the caller
-    * while sibling sink jobs are still writing into it; draining all
-    * outcomes first guarantees no orphaned write survives the call. */
-  def awaitAll(fs: Seq[Future[_]])(implicit ec: ExecutionContext): Unit = {
-    val settled: Seq[Try[Any]] =
-      Await.result(
-        Future.sequence(fs.map(_.transform(t => Success(t)))), Duration.Inf)
-    settled.collectFirst { case Failure(e) => throw e }
-    ()
+  /** A tab-separated file with a header line, every column a string: the
+    * frame `header=true` inference gives, without its job. The header
+    * line is read on the driver and passed as the schema, so building the
+    * frame starts no Spark job. Names must be non-empty, quote-free and
+    * distinct ignoring case (where inference would rename or unquote). */
+  def readTsv(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val in = new BufferedReader(new InputStreamReader(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p), UTF_8))
+    val header = try Option(in.readLine()).getOrElse("") finally in.close()
+    val names = header.stripSuffix("\r").split("\t", -1).toSeq
+    require(names.forall(n => n.nonEmpty && !n.contains('"')) &&
+      names.map(_.toLowerCase(Locale.ROOT)).distinct.size == names.size,
+      s"$path: header names must be non-empty, unquoted and distinct " +
+        s"ignoring case: ${names.mkString("[", ", ", "]")}")
+    spark.read.option("sep", "\t").option("header", "true")
+      .schema(StructType(names.map(StructField(_, StringType)))).csv(path)
   }
 
   /** Group membership (J1/J3 + A5): the non-null `sample_id`s present in

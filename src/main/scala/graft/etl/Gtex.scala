@@ -5,6 +5,7 @@ import graft.functions.Fns
 import graft.ids.IdMinter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** GTEx pipeline (E2) — `fhir_etl/GTEx/gtex_fhirizer.py`, Spark-first.
   *
@@ -51,7 +52,7 @@ object Gtex {
 
   /** S3 staged form: one row per subject/sample API record. */
   def readTsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
+    Etl.readTsv(spark, path)
 
   /** S3: the paginated subject API via the DataSourceV2 page source —
     * one InputPartition per staged page envelope, records parsed with
@@ -61,18 +62,24 @@ object Gtex {
     spark.read.format("graft.sources.RestPagesSource").option("path", dir)
       .load()
       .select(from_json($"value",
-        org.apache.spark.sql.types.StructType.fromDDL(
+        StructType.fromDDL(
           "subjectId STRING, sex STRING, ageBracket STRING, hardyScale STRING"))
         .as("r"))
       .select("r.*")
   }
+
+  /** The fileList JSON as schema inference types it (every leaf a
+    * string), given up front so that reading it starts no job. */
+  val FileListSchema: StructType = StructType.fromDDL("filesets ARRAY<STRUCT<" +
+    "files: ARRAY<STRUCT<name: STRING, release: STRING, size: STRING, type: STRING>>, " +
+    "name: STRING, subpath: STRING>>, name STRING")
 
   /** S4: the nested fileList JSON — keep `GTEx Analysis V8`, drop the
     * protected fileset positionally (row 0, gtex_fhirizer.py:83), then
     * unnest filesets→files (P14). */
   def readFileList(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    spark.read.option("multiLine", "true").json(path)
+    spark.read.option("multiLine", "true").schema(FileListSchema).json(path)
       .filter($"name" === "GTEx Analysis V8")
       .select(posexplode($"filesets").as(Seq("fs_pos", "fs")))
       .filter($"fs_pos" > 0)
@@ -186,33 +193,20 @@ object Gtex {
           col("fs_name").as("display")).as("valueCoding"))).as("profile")))
         .as("content"))
 
-  /** E2 end-to-end: all six NDJSON outputs (gtex_fhirizer.py:410-423). */
+  /** E2 end-to-end: all six NDJSON outputs (gtex_fhirizer.py:410-423),
+    * overwritten in one Spark job ([[graft.sinks.Ndjson.writeAll]]);
+    * GTEx's Group reads fixtures, not the job's own output. */
   def runAll(spark: SparkSession, fixtureDir: String, outDir: String): Unit = {
-    import graft.sinks.Ndjson
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // subjects feeds two transforms, samples feeds two — cache both for
-    // the job. All six sinks are independent outputs (GTEx's Group reads
-    // fixtures, not own output), so they run as CONCURRENT Spark jobs;
-    // caches release after every consumer finishes.
-    val subjects = readTsv(spark, s"$fixtureDir/gtex_subjects.tsv").persist()
-    val samples = readTsv(spark, s"$fixtureDir/gtex_samples.tsv").persist()
-    try {
-      Etl.awaitAll(Seq(
-        Future(Ndjson.write(patients(subjects), outDir, "Patient")),
-        Future(Ndjson.write(researchSubjects(subjects), outDir, "ResearchSubject")),
-        Future(Ndjson.write(specimens(samples), outDir, "Specimen")),
-        Future(Ndjson.write(researchStudy(spark), outDir, "ResearchStudy")),
-        Future(Ndjson.write(documentReferences(
-          readFileList(spark, s"$fixtureDir/gtex_filelist.json")),
-          outDir, "DocumentReference")),
-        Future(Ndjson.write(group(
-          readTsv(spark, s"$fixtureDir/gtex_sample_attrs.tsv"), samples),
-          outDir, "Group"))))
-    } finally {
-      subjects.unpersist()
-      samples.unpersist()
-    }
+    val subjects = readTsv(spark, s"$fixtureDir/gtex_subjects.tsv")
+    val samples = readTsv(spark, s"$fixtureDir/gtex_samples.tsv")
+    graft.sinks.Ndjson.writeAll(outDir, Seq(
+      "Patient" -> patients(subjects),
+      "ResearchSubject" -> researchSubjects(subjects),
+      "Specimen" -> specimens(samples),
+      "ResearchStudy" -> researchStudy(spark),
+      "DocumentReference" -> documentReferences(
+        readFileList(spark, s"$fixtureDir/gtex_filelist.json")),
+      "Group" -> group(readTsv(spark, s"$fixtureDir/gtex_sample_attrs.tsv"), samples)))
   }
 
   // ------------------------------------------------------------------

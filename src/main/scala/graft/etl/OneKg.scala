@@ -3,6 +3,8 @@ package graft.etl
 import graft.fhir.FhirBuild._
 import graft.functions.Fns
 import graft.ids.IdMinter
+import graft.sinks.Ndjson
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,6 +25,9 @@ import org.apache.spark.sql.functions._
   * `https://https://` minting system (oneKg_fhirizer.py:68) and the
   * gtexportal identifier system on Patient (:69, a copy-paste bug
   * reproduced deliberately; SURVEY §7.5 item 1).
+  *
+  * Group members are header ids ∩ sample-info `Sample`s, the set the
+  * reference reads back from its own Specimen.ndjson ([[runAll]]).
   *
   * Scale: each transform is one narrow `select` over the scan (no
   * shuffle). The Group build ([[Etl.groupMembers]]) and the docref dedup
@@ -64,11 +69,10 @@ object OneKg {
   // Sources
   // ------------------------------------------------------------------
 
-  /** S1: sample_info TSV scan with explicit schema-light options (the
-    * reference lets pandas infer; explicit header+tab is enough here —
-    * all consumed columns are strings). */
+  /** S1: sample_info TSV scan, every column a string (the reference
+    * lets pandas infer; all consumed columns are strings). */
   def readSampleInfo(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
+    Etl.readTsv(spark, path)
 
   /** S5 staged form: the FTP listing frame (file, size, last_modified). */
   def readFtpListing(spark: SparkSession, path: String): DataFrame =
@@ -207,8 +211,8 @@ object OneKg {
   }
 
   // ------------------------------------------------------------------
-  // Group: S7 NDJSON specimen scan + J1 semi-join + A5 collect
-  // (document_references.py:187-238)
+  // Group: J1 membership + A5 collect (document_references.py:187-238);
+  // S7, the reference's scan of its own Specimen.ndjson
   // ------------------------------------------------------------------
 
   /** S7: identifier values from Specimen.ndjson whose system matches
@@ -242,39 +246,32 @@ object OneKg {
         col("member"))
 
   /** E1 end-to-end: transform all fixtures and write the six NDJSON
-    * files (K1/K2 for the per-row types, K3 create_or_extend for
-    * DocumentReference and Group, mirroring
-    * document_references.py:251-257). The Group step scans the
-    * Specimen.ndjson this very job wrote — the reference's own flow
-    * (S7 over its prior output). */
+    * files in one Spark write job ([[graft.sinks.Ndjson.writeAll]]).
+    * DocumentReference and Group are K3 create_or_extend outputs
+    * (document_references.py:251-257): into a fresh directory that is a
+    * plain write, so they join the one job; a target that already exists
+    * (a transform into a used directory) is upserted instead.
+    *
+    * Group members are header ids ∩ the `Sample`s of the sample-info
+    * frame. The reference takes the second set from the Specimen.ndjson
+    * this same job writes (S7 over its own output), but that set is the
+    * same one: each Specimen's `TechSystem` identifier value IS its
+    * `Sample`, and a null `Sample` drops out on both paths. */
   def runAll(spark: SparkSession, fixtureDir: String, outDir: String): Unit = {
-    import graft.sinks.Ndjson
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // three transforms share one TSV scan — cache it for the job
     val si = readSampleInfo(spark, s"$fixtureDir/onekg_sample_info.tsv")
-      .persist()
-    // the five per-type sinks are independent outputs — submit them as
-    // CONCURRENT Spark jobs (thread-per-action; the scheduler interleaves
-    // their stages across idle cores). Only Group must wait: it re-reads
-    // the Specimen.ndjson this very job writes (the reference's own
-    // S7-over-own-output flow).
-    try {
-      Etl.awaitAll(Seq(
-        Future(Ndjson.write(patients(si), outDir, "Patient")),
-        Future(Ndjson.write(researchSubjects(si), outDir, "ResearchSubject")),
-        Future(Ndjson.write(specimens(si), outDir, "Specimen")),
-        Future(Ndjson.write(researchStudy(spark), outDir, "ResearchStudy")),
-        Future(Ndjson.createOrExtend(spark,
-          documentReferences(
-            readFtpListing(spark, s"$fixtureDir/onekg_ftp_listing.tsv")),
-          outDir, "DocumentReference"))))
-    } finally si.unpersist()
-    Ndjson.createOrExtend(spark,
-      group(spark,
+    val (existing, fresh) = Seq(
+      "DocumentReference" -> documentReferences(
+        readFtpListing(spark, s"$fixtureDir/onekg_ftp_listing.tsv")),
+      "Group" -> group(spark,
         readHeaderSampleIds(spark, s"$fixtureDir/onekg_vcf_header.txt"),
-        specimenSampleIds(spark, s"$outDir/Specimen.ndjson")),
-      outDir, "Group")
+        si.select(col("Sample").as("sample_id")))
+    ).partition { case (t, _) => Files.exists(Paths.get(outDir, s"$t.ndjson")) }
+    Ndjson.writeAll(outDir, Seq(
+      "Patient" -> patients(si),
+      "ResearchSubject" -> researchSubjects(si),
+      "Specimen" -> specimens(si),
+      "ResearchStudy" -> researchStudy(spark)) ++ fresh)
+    existing.foreach { case (t, df) => Ndjson.createOrExtend(spark, df, outDir, t) }
   }
 
   /** V4: reconciliation counts (document_references.py:209-216) —

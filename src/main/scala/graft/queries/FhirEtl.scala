@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object FhirEtl extends Registry {
 
-  val FixtureDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR", "/root/repo/fixtures")
+  /** `GRAFT_FIXTURES_DIR`, else `fixtures/` under the working directory
+    * (the checkout root when run through sbt). */
+  val FixtureDir: String = sys.env.getOrElse("GRAFT_FIXTURES_DIR",
+    java.nio.file.Paths.get("fixtures").toAbsolutePath.toString)
   val GoldenDir = "/root/reference/fhir_etl/oneKgenomes/META"
   val GtexGoldenDir = "/root/reference/fhir_etl/GTEx/META"
 
@@ -412,8 +414,8 @@ object FhirEtl extends Registry {
     // ------------------------------------------------------------------
     // q73/q74: the END-TO-END pipelines through the driver gate — runAll
     // writes all six NDJSON outputs (K1 per-row writes, K2 singleton,
-    // K3 create_or_extend, including the reference's own S7-over-own-
-    // output Group flow), then Validate.profile re-reads and validates
+    // K3 create_or_extend targets, in one write job into this fresh
+    // directory), then Validate.profile re-reads and validates
     // the engine's OWN files. Counts reproduce the reference CLI's
     // summary (README.md:35,38) and min/max id pin the uuid5 chain of
     // every written type against the reference goldens.

@@ -1,8 +1,10 @@
 package graft.sinks
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.rdd.UnionRDD
+import org.apache.spark.sql.{DataFrame, GraftFrames, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** NDJSON sinks — the reference's native output format: one JSON object
   * per line, one `<ResourceType>.ndjson` file per type
@@ -17,9 +19,18 @@ import org.apache.spark.sql.functions._
   * generator writes straight from the internal row, with no
   * `Dataset.toJSON` round trip through external `Row`s.
   *
-  * Scale note: golden-compat single-file output forces one write task.
-  * [[write]] ends in `coalesce(1)`, which is narrow, so its whole
-  * upstream (scan, transform, serialization) runs inside that one task;
+  * One write job per project: [[writeAll]] writes every fresh per-type
+  * file of a project with ONE Spark write, whose task i writes frame i
+  * (each frame `coalesce(1)`'d), so the types write in parallel tasks of
+  * one stage. The frames are joined at the RDD level (`UnionRDD` over
+  * each frame's `queryExecution.toRdd`, which concatenates partitions),
+  * NOT with `Dataset.union`: a union of `SinglePartition` children is
+  * itself `SinglePartition` (`spark.sql.unionOutputPartitioning`), and
+  * its partition zips every child into one, i.e. all types in one file.
+  *
+  * Scale note: golden-compat single-file output forces one write task
+  * per file. `coalesce(1)` is narrow, so a frame's whole upstream (scan,
+  * transform, serialization) runs inside its one task;
   * [[createOrExtend]] gathers its lines with one single-partition
   * exchange (its plan is described there). Either way the serial part
   * handles the rows of the one file it writes, as any "collect results
@@ -31,8 +42,14 @@ object Ndjson {
 
   /** K1/K2: overwrite-write df as `<dir>/<resourceType>.ndjson`. */
   def write(df: DataFrame, dir: String, resourceType: String): Unit =
-    writeSingleFile(jsonLines(df).coalesce(1),
-      Paths.get(dir, s"$resourceType.ndjson"))
+    writeAll(dir, Seq(resourceType -> df))
+
+  /** K1/K2 for a whole project: overwrite-write each `(type, frame)` as
+    * `<dir>/<type>.ndjson`, all in one Spark write job. A frame with no
+    * rows gives an empty file. If any frame fails, no file is published. */
+  def writeAll(dir: String, frames: Seq[(String, DataFrame)]): Unit =
+    publish(frames.map { case (t, df) =>
+      Paths.get(dir, s"$t.ndjson") -> jsonLines(df).coalesce(1) })
 
   /** One `line` column holding each row of `df` as a JSON object: the
     * bytes `df.toJSON` produces (same default options, so null fields
@@ -41,19 +58,46 @@ object Ndjson {
     df.select(to_json(struct(df.columns.toSeq.map(c =>
       col("`" + c.replace("`", "``") + "`")): _*)).as("line"))
 
-  /** Write a one-partition frame of lines as `target`: Spark writes into
-    * a fresh temp dir, its one part file is moved over `target`, and the
-    * temp dir is deleted whether or not the write succeeded. */
-  private def writeSingleFile(lines: DataFrame, target: Path): Unit = {
+  /** Publish one-partition frames of lines, frame i as target i: one
+    * Spark write into a fresh temp dir (several frames are concatenated
+    * partition by partition, so part i holds frame i), then each part
+    * file is moved over its target. Spark writes no part file for an
+    * empty partition other than the first; such a target gets an empty
+    * file. The temp dir is deleted whether or not the write succeeded. */
+  private def publish(files: Seq[(Path, DataFrame)]): Unit = {
+    require(files.nonEmpty && files.map(_._1).distinct.size == files.size,
+      s"NDJSON targets must be distinct and non-empty: ${files.map(_._1)}")
     val tmp = Files.createTempDirectory("ndjson")
     try {
       val out = tmp.resolve("out")
+      val lines = files match {
+        // one frame is written as it is, so the write's plan is its whole
+        // query: exchanges and SQL metrics stay visible there
+        case Seq((_, one)) => one
+        case _ =>
+          val spark = files.head._2.sparkSession
+          // `coalesce(1)` plans exactly one partition, even over an empty
+          // input; any other count would shift every later part
+          val rdds = files.map { case (target, df) =>
+            val rdd = df.queryExecution.toRdd
+            require(rdd.getNumPartitions == 1,
+              s"$target: ${rdd.getNumPartitions} partitions, expected 1")
+            rdd
+          }
+          GraftFrames.ofInternalRows(spark,
+            new UnionRDD(spark.sparkContext, rdds), files.head._2.schema)
+      }
       lines.write.mode(SaveMode.Overwrite).text(out.toString)
-      val parts = Files.list(out)
-      val part = try parts.filter(_.getFileName.toString.startsWith("part-"))
-        .findFirst().get() finally parts.close()
-      Files.createDirectories(target.getParent)
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+      val s = Files.list(out)
+      val parts = try s.iterator.asScala.toList finally s.close()
+      for (((target, _), i) <- files.zipWithIndex) {
+        Files.createDirectories(target.getParent)
+        parts.find(_.getFileName.toString.startsWith(f"part-$i%05d-")) match {
+          case Some(part) =>
+            Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+          case None => Files.write(target, Array.emptyByteArray)
+        }
+      }
     } finally graft.queries.Tables.deleteRecursively(tmp.toFile)
   }
 
@@ -111,7 +155,7 @@ object Ndjson {
       .agg(max_by($"line", precedence).as("line"), min($"pos").as("first_pos"))
       .sortWithinPartitions($"first_pos")
       .select($"line")
-    writeSingleFile(resolved, path)
+    publish(Seq(path -> resolved))
   }
 
   /** Streaming form of the K1/K3 tail: drain a stream of resources into

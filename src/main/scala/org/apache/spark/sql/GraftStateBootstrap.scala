@@ -1,5 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
+
 /** Package-private-access shim (the standard Spark-library compat
   * pattern): batch-mode transformWithState executions resolve the
   * driver's StateStoreCoordinator RPC endpoint, but only a STREAMING
@@ -15,4 +19,12 @@ object GraftStateBootstrap {
       .stateStoreCoordinator
     ()
   }
+}
+
+/** The same shim for `private[sql]` frame construction: an RDD of
+  * internal rows as a DataFrame, with no conversion to external `Row`s. */
+object GraftFrames {
+  def ofInternalRows(s: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    s.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

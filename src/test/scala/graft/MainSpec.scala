@@ -21,7 +21,7 @@ class MainSpec extends AnyFunSuite {
   test("transform -p 1kgenomes writes the full META dir; validate exits 0 on it") {
     val out = Files.createTempDirectory("cli-1kg").toString
     assert(Main.run(spark, Array("transform", "-p", "1kgenomes",
-      "--fixtures", "/root/repo/fixtures", "--out", out)) == 0)
+      "--fixtures", graft.queries.FhirEtl.FixtureDir, "--out", out)) == 0)
     val written = new java.io.File(out).listFiles()
       .map(_.getName).filter(_.endsWith(".ndjson")).sorted.toSeq
     assert(written == Seq("DocumentReference.ndjson", "Group.ndjson",
@@ -33,7 +33,7 @@ class MainSpec extends AnyFunSuite {
   test("transform -p gtex end-to-end; validate exits 0 on it") {
     val out = Files.createTempDirectory("cli-gtex").toString
     assert(Main.run(spark, Array("transform", "-p", "gtex",
-      "--fixtures", "/root/repo/fixtures", "--out", out)) == 0)
+      "--fixtures", graft.queries.FhirEtl.FixtureDir, "--out", out)) == 0)
     assert(Main.run(spark, Array("validate", "--path", out)) == 0)
   }
 

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * identifier, type, membership, extension) still golden-match. */
 class GtexGoldenSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.queries.FhirEtl.FixtureDir
   private val golden = "/root/reference/fhir_etl/GTEx/META"
 
   lazy val spark: SparkSession = SparkSession.builder()

@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   */
 class OneKgGoldenSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.queries.FhirEtl.FixtureDir
   private val golden = "/root/reference/fhir_etl/oneKgenomes/META"
 
   lazy val spark: SparkSession = SparkSession.builder()

@@ -1,18 +1,20 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The shuffling single-file FHIR sinks feed one output each, so each
   * takes at most one exchange, never range-partitioned: the A1
   * DocumentReference dedup, and the Group membership of both projects
   * ([[Etl.groupMembers]]). Results are checked against a plain
-  * formulation of the same contract. */
+  * formulation of the same contract. Each project's `runAll` writes all
+  * its files with one file-writing execution. */
 class SinkPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -98,5 +100,49 @@ class SinkPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val g = Etl.groupMembers(Seq("a", "b").toDF("sample_id"),
       Seq("c", null).toDF("sample_id"))(identity)
     assert(g.collect().map(_.getSeq[Any](0)).toSeq == Seq(Seq.empty))
+  }
+
+  private def files(dir: Path): Map[String, Seq[Byte]] = {
+    val s = Files.list(dir)
+    try s.iterator.asScala.map(p => p.getFileName.toString ->
+      Files.readAllBytes(p).toSeq).toMap finally s.close()
+  }
+
+  private val runAlls = Seq[(String, (SparkSession, String, String) => Unit)](
+    "1kgenomes" -> OneKg.runAll, "gtex" -> Gtex.runAll)
+
+  test("runAll: one file-writing execution per project, six files") {
+    for ((project, runAll) <- runAlls) {
+      val dir = Files.createTempDirectory(s"runall-$project")
+      val plans = graft.SparkEvents.writePlans(spark)(runAll(spark, fixtures, dir.toString))
+      assert(plans.size == 1, s"$project: ${plans.size} file writes")
+      assert(files(dir).keySet == Set("Patient", "ResearchSubject", "Specimen",
+        "ResearchStudy", "DocumentReference", "Group").map(_ + ".ndjson"), project)
+    }
+  }
+
+  test("1KG runAll: Group members from sample info = members from the written Specimen.ndjson") {
+    val dir = Files.createTempDirectory("runall-group")
+    OneKg.runAll(spark, fixtures, dir.toString)
+    val readBack = OneKg.group(spark,
+      OneKg.readHeaderSampleIds(spark, s"$fixtures/onekg_vcf_header.txt"),
+      OneKg.specimenSampleIds(spark, dir.resolve("Specimen.ndjson").toString))
+    val written = spark.read.json(dir.resolve("Group.ndjson").toString)
+    assert(members(written).nonEmpty)
+    assert(members(written) == members(readBack))
+  }
+
+  test("transform twice into one directory gives the bytes of one run") {
+    for ((project, _) <- runAlls) {
+      val once = Files.createTempDirectory(s"once-$project")
+      val twice = Files.createTempDirectory(s"twice-$project")
+      def transform(out: Path): Unit = assert(graft.Main.run(spark, Array("transform",
+        "-p", project, "--fixtures", fixtures, "--out", out.toString)) == 0)
+      transform(once)
+      transform(twice)
+      transform(twice)
+      assert(files(once).size == 6)
+      assert(files(twice) == files(once), project)
+    }
   }
 }

@@ -42,7 +42,7 @@ class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("end-to-end 1KG job: sinks + validate + golden-file equality") {
     val out = Files.createTempDirectory("onekg-e2e").toString
-    OneKg.runAll(spark, "/root/repo/fixtures", out)
+    OneKg.runAll(spark, graft.queries.FhirEtl.FixtureDir, out)
     assert(summaryMap(out) == Map(
       "DocumentReference" -> 48L, "Specimen" -> 3500L,
       "ResearchStudy" -> 1L, "ResearchSubject" -> 3500L,
@@ -63,7 +63,7 @@ class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("end-to-end GTEx job: sinks + validate counts") {
     val out = Files.createTempDirectory("gtex-e2e").toString
-    Gtex.runAll(spark, "/root/repo/fixtures", out)
+    Gtex.runAll(spark, graft.queries.FhirEtl.FixtureDir, out)
     assert(summaryMap(out) == Map(
       "DocumentReference" -> 49L, "Specimen" -> 5L,
       "ResearchStudy" -> 1L, "ResearchSubject" -> 980L,

@@ -110,13 +110,16 @@ class Round21OptSpec extends AnyFunSuite {
       Similarity.HnswBaseHops)
     assert(dupRows(baseVisited) == 0L,
       "base-layer visited set must already be (q,vec)-distinct")
-    // the union's distinct is still REQUIRED: the overlap between the
-    // two layers (upper nodes are base nodes) is the one real source
-    // of duplicates
+    // the cross-layer overlap (upper nodes are base nodes) is the one
+    // source of duplicates in the union: its distinct removes exactly
+    // the (q,vec) pairs both layers visited, however many this fixture
+    // happens to have
+    val key = Seq(col("q_id"), col("vec_id"))
+    val overlap = upVisited.select(key: _*)
+      .join(baseVisited.select(key: _*), Seq("q_id", "vec_id"), "left_semi").count()
     val union = baseVisited.select(col("q_id"), col("vec_id"), col("cos"))
       .unionAll(upVisited.select(col("q_id"), col("vec_id"), col("cos")))
-    assert(union.count() > union.distinct().count(),
-      "the cross-layer union must overlap — otherwise distinct() " +
-        "should be removed outright")
+    assert(union.count() - union.distinct().count() == overlap,
+      s"the union's distinct must remove exactly the $overlap cross-layer pairs")
   }
 }

@@ -7,9 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeserializeToObje
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.{Failed, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -57,32 +55,8 @@ class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** Run `body` and return the QueryExecution of every write it ran. The
-    * listener bus is async, so this waits until no new plan has arrived
-    * for 300 ms. */
-  private def writePlans(body: => Unit): Seq[QueryExecution] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      var (last, stable) = (-1, 0)
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime < deadline) {
-        Thread.sleep(100)
-        val n = seen.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toSeq.filter(_.optimizedPlan.exists {
-      case _: DataWritingCommand => true
-      case _ => false
-    })
-  }
+  private def writePlans(body: => Unit): Seq[QueryExecution] =
+    graft.SparkEvents.writePlans(spark)(body)
 
   test("K1 write: one line per row, nulls dropped") {
     import spark.implicits._
@@ -260,9 +234,47 @@ class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val plans = writePlans {
       Ndjson.write(d, dir, "Thing")
       Ndjson.createOrExtend(spark, d, dir, "Thing")
+      Ndjson.writeAll(dir, Seq("Thing" -> d, "Other" -> df("a" -> 1)))
     }
-    assert(plans.size == 2, s"expected two writes, saw ${plans.size}")
+    assert(plans.size == 3, s"expected three writes, saw ${plans.size}")
     plans.foreach(qe => assert(objectNodes(qe.optimizedPlan).isEmpty,
       s"object round trip in the sink plan:\n${qe.optimizedPlan}"))
+  }
+
+  private def bytes(dir: String, t: String): Seq[Byte] =
+    Files.readAllBytes(Paths.get(dir, s"$t.ndjson")).toSeq
+
+  test("writeAll: one write; each file holds the bytes write gives for its frame alone") {
+    import org.apache.spark.sql.functions._
+    val frames = Seq(
+      "Summed" -> df("b" -> 2, "a" -> 1, "b" -> 3).groupBy("id")
+        .agg(sum("v").as("v")).orderBy("id"),
+      "Empty" -> df("a" -> 1).filter(col("v") > 5),
+      "Thing" -> awkward())
+    val all = tmpDir()
+    val plans = writePlans(Ndjson.writeAll(all, frames))
+    assert(plans.size == 1, s"expected one write, saw ${plans.size}")
+    val alone = tmpDir()
+    frames.foreach { case (t, f) => Ndjson.write(f, alone, t) }
+    for ((t, _) <- frames) assert(bytes(all, t) == bytes(alone, t), t)
+    assert(readLines(all, "Summed") == Seq("""{"id":"a","v":1}""", """{"id":"b","v":5}"""))
+    assert(bytes(all, "Empty").isEmpty)
+    assert(readLines(all, "Thing").size == 5)
+  }
+
+  test("writeAll: a frame that fails at run time publishes no file") {
+    import org.apache.spark.sql.functions._
+    val failing = spark.range(3).select(col("id"),
+      when(col("id") === 2, raise_error(lit("boom"))).cast("string").as("x"))
+    // the second fails in the shuffle stage that runs before the write
+    for (bad <- Seq(failing, failing.repartition(2))) {
+      val dir = tmpDir()
+      val e = intercept[Exception](
+        Ndjson.writeAll(dir, Seq("Good" -> df("a" -> 1), "Bad" -> bad)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+      val s = Files.list(Paths.get(dir))
+      try assert(s.count() == 0, s"files published in $dir") finally s.close()
+    }
   }
 }

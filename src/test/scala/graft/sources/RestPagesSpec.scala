@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * source-agnostic (page source ≡ TSV source). */
 class RestPagesSpec extends AnyFunSuite {
 
-  private val pages = "/root/repo/fixtures/gtex_subject_pages"
+  private val pages = s"${graft.queries.FhirEtl.FixtureDir}/gtex_subject_pages"
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -32,7 +32,7 @@ class RestPagesSpec extends AnyFunSuite {
     val fromPages = Gtex.patients(Gtex.readSubjectPages(spark, pages))
       .toJSON.collect().sorted
     val fromTsv = Gtex.patients(
-      Gtex.readTsv(spark, "/root/repo/fixtures/gtex_subjects.tsv"))
+      Gtex.readTsv(spark, s"${graft.queries.FhirEtl.FixtureDir}/gtex_subjects.tsv"))
       .toJSON.collect().sorted
     assert(fromPages.toSeq == fromTsv.toSeq)
   }
