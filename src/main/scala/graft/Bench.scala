@@ -215,34 +215,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE partition-coalescing mode, parameterized for measurement.
-      // r20 A/B on a 22-query subset: parallelismFirst=false (the
-      // byte-targeted mode production guides recommend for large
-      // shuffles) read 35.2s vs 32.1s — it coalesces every sub-MB
-      // shuffle to ONE partition, which starves CPU-bound small-data
-      // stages (qbc's seed join went 2.6s → 6.4s single-task). At
-      // bench scale shuffle BYTES are tiny and stage COMPUTE isn't,
-      // so parallelism-first is the right local default; a 100 TB
-      // deployment, where partitions actually reach the advisory
-      // size, flips this via the env without touching code.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      // same pin as Verify and the test specs: without it, NTZ event
-      // timestamps shift with the host zone in bench runs (timing-only
-      // today, but a silent divergence trap)
-      .config("spark.sql.session.timeZone", "UTC")
-      // one state-store provider for the whole session (q6d pins this
-      // session-globally anyway — see its QueryDef; pinning it up front
-      // removes the run-order dependence)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed JVM/codegen warmup so the first timed query doesn't absorb
     // class-loading and executor-spinup cost; includes a real parquet

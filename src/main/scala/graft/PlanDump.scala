@@ -1,15 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query formatted-plan dumper for the optimization rounds: writes
   * `<outDir>/<query>_<tag>.txt` with the `explain("formatted")` of each
   * named query (plus any plans materialized during construction — the
   * PlanAudit capture, so checkpoint-terminated queries show their real
   * work). Unlike PlanAudit (fixed headline list, local[4]), this runs at
-  * the bench's own parallelism so the captured shape is the one the
-  * bench times:
+  * the bench's own parallelism (`SPARK_GRAFT_CPUS`, default 4) so the
+  * captured shape is the one the bench times:
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PlanDump \
   *     /root/testdata/sf0.1 plans/r20 before q5b_ann_recall qb8_kmv_overlap"
@@ -20,16 +19,8 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

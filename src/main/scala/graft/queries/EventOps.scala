@@ -407,17 +407,13 @@ object EventOps extends Registry {
       (s, dir) => {
         import s.implicits._
         // state-v2 operators execute against the state-store API even
-        // in batch mode; the RocksDB provider is the one that supports
-        // the v2 column families. Deliberately session-global and NOT
-        // restored: the returned DataFrame is lazy, so a save/restore
-        // here would revert the conf before execution reads it. The
-        // Bench and Verify session builders pin the same value up
-        // front, making this set idempotent there — every run sees ONE
-        // provider for the whole session instead of a run-order-
-        // dependent switch.
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
+        // in batch mode, and only the RocksDB provider supports the v2
+        // column families. The provider is session-global, so the
+        // session factory sets it; a query does not switch it.
+        require(s.conf.get("spark.sql.streaming.stateStore.providerClass")
+          == graft.Session.StateStoreProvider,
+          "q6d needs the RocksDB state-store provider; build the session " +
+            "with graft.Session")
         val ev = Tables.eventsRaw(s, dir).filter($"user_id" < 20)
         graft.streaming.EventStream.runningTotals(ev)
           .orderBy($"event_id")

@@ -59,7 +59,7 @@ object Tables {
       throw new java.io.IOException(s"scratch wipe: failed to delete $f")
   }
 
-  private def scratchRoot: Path =
+  private[queries] def scratchRoot: Path =
     Paths.get(System.getProperty("java.io.tmpdir"), "graft_scratch")
 
   private def stagingRoot: Path =

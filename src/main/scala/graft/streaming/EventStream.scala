@@ -404,7 +404,7 @@ object EventStream {
     *    NTZ wall times convert via timestampdiff against the NTZ epoch,
     *    which is timezone-INDEPENDENT (a cast to TimestampType would
     *    read the naive time in the session zone — correct only because
-    *    every session builder pins UTC; this form needs no such pin),
+    *    graft.Session pins UTC; this form needs no such pin),
     *    matching how the DuckDB oracles read the same files, and are
     *    rebuilt as nanos (µs·1000 — lossless).
     * Downstream event-time code keeps ONE input contract either way. */

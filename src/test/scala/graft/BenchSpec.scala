@@ -8,15 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * poisons vs_baseline to JSON null so a partially-broken suite can't
   * read as fast (r11's event family silently fail-fasted and made
   * BENCH_r11 look better than the suite deserved). */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def ok(s: SparkSession, dir: String): DataFrame =
     s.range(10).toDF("id")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CLI entry-point parity with the reference's command surface
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * full ETL into the out dir; `validate --path` prints counts + error
   * rows and exits 1 on any invalid line, 2 on a bad path — driven
   * end-to-end on fixtures through [[Main.run]]. */
-class MainSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MainSpec extends AnyFunSuite with SparkSuite {
 
   test("transform -p 1kgenomes writes the full META dir; validate exits 0 on it") {
     val out = Files.createTempDirectory("cli-1kg").toString

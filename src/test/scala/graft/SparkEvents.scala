@@ -22,8 +22,10 @@ object SparkEvents {
     }
   }
 
-  /** The QueryExecution of every successful file write `body` ran. */
-  def writePlans(spark: SparkSession)(body: => Unit): Seq[QueryExecution] = {
+  /** `body`'s result and the QueryExecution of every successful action
+    * it ran. */
+  def executions[A](spark: SparkSession)(body: => A)
+      : (A, Seq[QueryExecution]) = {
     val seen = new ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -32,16 +34,20 @@ object SparkEvents {
     }
     spark.listenerManager.register(listener)
     try {
-      body
+      val result = body
       val marker = spark.range(1)
       marker.collect()
       awaitMarker(seen.asScala.exists(_ eq marker.queryExecution))
+      (result, seen.asScala.toSeq.filterNot(_ eq marker.queryExecution))
     } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toSeq.filter(_.optimizedPlan.exists {
+  }
+
+  /** The QueryExecution of every successful file write `body` ran. */
+  def writePlans(spark: SparkSession)(body: => Unit): Seq[QueryExecution] =
+    executions(spark)(body)._2.filter(_.optimizedPlan.exists {
       case _: DataWritingCommand => true
       case _ => false
     })
-  }
 
   /** The number of Spark jobs `body` started. */
   def jobsDuring(spark: SparkSession)(body: => Unit): Int = {

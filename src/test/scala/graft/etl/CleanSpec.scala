@@ -1,18 +1,13 @@
 package graft.etl
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** F11–F13 cleaning semantics vs the reference (`utils.py:138-206`). */
-class CleanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CleanSpec extends AnyFunSuite with SparkSuite {
 
   test("F11 decimalsToDouble: nested decimals become doubles") {
     import spark.implicits._

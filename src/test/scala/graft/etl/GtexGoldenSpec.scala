@@ -1,7 +1,8 @@
 package graft.etl
 
 import com.fasterxml.jackson.databind.{ObjectMapper, SerializationFeature}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GTEx golden parity. Patient / ResearchSubject / DocumentReference /
@@ -11,17 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * run on the synthetic fixtures: their minting chain and shapes are
   * pinned here, and the Group's constant-derived fields (id,
   * identifier, type, membership, extension) still golden-match. */
-class GtexGoldenSpec extends AnyFunSuite {
+class GtexGoldenSpec extends AnyFunSuite with SparkSuite {
 
   private val fixtures = graft.queries.FhirEtl.FixtureDir
   private val golden = "/root/reference/fhir_etl/GTEx/META"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val mapper = new ObjectMapper()
   mapper.configure(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)

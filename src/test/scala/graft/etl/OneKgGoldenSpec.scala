@@ -2,7 +2,8 @@ package graft.etl
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper, SerializationFeature}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -15,17 +16,10 @@ import scala.jdk.CollectionConverters._
   * normalized because the reference iterates a hash-seeded Python set
   * (order is not part of its contract).
   */
-class OneKgGoldenSpec extends AnyFunSuite {
+class OneKgGoldenSpec extends AnyFunSuite with SparkSuite {
 
   private val fixtures = graft.queries.FhirEtl.FixtureDir
   private val golden = "/root/reference/fhir_etl/oneKgenomes/META"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val mapper = new ObjectMapper()
   mapper.configure(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)

@@ -1,7 +1,7 @@
 package graft.etl
 
+import graft.SparkSuite
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -9,13 +9,7 @@ import scala.jdk.CollectionConverters._
   * readers take it from the header line on the driver, the fileList
   * reader declares it. Each gives the schema inference would, and
   * building one starts no Spark job. */
-class ReadersSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReadersSpec extends AnyFunSuite with SparkSuite {
 
   private val fixtures = graft.queries.FhirEtl.FixtureDir
 

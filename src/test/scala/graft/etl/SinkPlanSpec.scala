@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.SparkSuite
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
@@ -15,14 +16,8 @@ import scala.jdk.CollectionConverters._
   * ([[Etl.groupMembers]]). Results are checked against a plain
   * formulation of the same contract. Each project's `runAll` writes all
   * its files with one file-writing execution. */
-class SinkPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SinkPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
+    with SparkSuite {
 
   private val fixtures = graft.queries.FhirEtl.FixtureDir
 

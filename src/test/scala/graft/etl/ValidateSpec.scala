@@ -1,7 +1,8 @@
 package graft.etl
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   AttributeSet, ExprId, Expression, GetJsonObject, JsonToStructs, JsonTuple}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
@@ -14,14 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** V3 parity with the reference CLI (`README.md:35,38`) plus the full
   * end-to-end jobs: transform fixtures → NDJSON sinks → validate the
   * written directory → reference count tables. */
-class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
+    with SparkSuite {
 
   private def summaryMap(dir: String): Map[String, Long] =
     Validate.summary(spark, dir).collect()

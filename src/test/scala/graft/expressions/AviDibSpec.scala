@@ -1,11 +1,12 @@
 package graft.expressions
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The AVI codec must honor the container format: frames come from
   * chunk walking (not offsets), the avih frame count is cross-checked,
   * and malformed containers are rejected. */
-class AviDibSpec extends AnyFunSuite {
+class AviDibSpec extends AnyFunSuite with SparkSuite {
 
   private def frameBytes(avi: Array[Byte]): Seq[Array[Byte]] =
     AviDib.frames(avi).toArray[Array[Byte]](
@@ -48,8 +49,6 @@ class AviDibSpec extends AnyFunSuite {
   }
 
   test("expressions: container decode as columns over a DataFrame") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._

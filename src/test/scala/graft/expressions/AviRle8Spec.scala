@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The RLE8 codec must honor the BI_RLE8 stream semantics: encoded
@@ -8,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * retain the PREVIOUS frame's content (interframe compression against
   * a persistent buffer). Every test replays expectations independently
   * from the row-color model, never from the codec's own internals. */
-class AviRle8Spec extends AnyFunSuite {
+class AviRle8Spec extends AnyFunSuite with SparkSuite {
 
   private val W = AviRle8.FrameW
   private val H = AviRle8.FrameH
@@ -131,8 +132,6 @@ class AviRle8Spec extends AnyFunSuite {
 
   test("expression pipeline: encode feeds octet_length and the decode " +
     "in one projection over a DataFrame") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._

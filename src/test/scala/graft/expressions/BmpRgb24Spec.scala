@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The BMP codec must honor the FORMAT, not just invert its own
@@ -7,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bytes, so a coupled top-down encode/decode pair cannot cancel out),
   * rows pad to 4-byte boundaries, and malformed containers are
   * rejected. */
-class BmpRgb24Spec extends AnyFunSuite {
+class BmpRgb24Spec extends AnyFunSuite with SparkSuite {
 
   private def ints(a: org.apache.spark.sql.catalyst.util.ArrayData) =
     a.toIntArray().toSeq
@@ -57,8 +58,6 @@ class BmpRgb24Spec extends AnyFunSuite {
   }
 
   test("expressions over a DataFrame: codegen encode/decode/dims") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * just the fixtures the unit specs pin. Raw ScalaCheck generators over
   * fixed seeds (scalatestplus bridge isn't on the offline classpath;
   * fixed seeds also make failures exactly reproducible). */
-class ExprPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExprPropertySpec extends AnyFunSuite with SparkSuite {
 
   private def sample[A](g: Gen[A], seed: Long): A =
     g(Gen.Parameters.default, Seed(seed)).get

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The KMV aggregate's contract: bounded state, distinctness, order-
@@ -7,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark surface producing exactly the k smallest distinct values
   * across partition boundaries (partial aggregation exercises
   * serialize/merge for real). */
-class KmvSketchSpec extends AnyFunSuite {
+class KmvSketchSpec extends AnyFunSuite with SparkSuite {
 
   private def agg(k: Int) = KmvSketchAgg(
     org.apache.spark.sql.catalyst.expressions.BoundReference(
@@ -61,8 +62,6 @@ class KmvSketchSpec extends AnyFunSuite {
 
   test("DataFrame surface: partial aggregation across many partitions " +
     "yields the exact bottom-k per group") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     val df = (1L to 10000L).map(i => (i % 3, i * 2654435761L % 1000003L))

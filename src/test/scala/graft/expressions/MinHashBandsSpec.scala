@@ -1,6 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * corpus text and on edge cases. This is the engine-vs-independent-
   * recompute evidence backing the q42 oracle, which replays the same
   * formula in DuckDB (`md5_number_lower` — see [[graft.expressions.Md5Hash64]]). */
-class MinHashBandsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinHashBandsSpec extends AnyFunSuite with SparkSuite {
 
   /** Md5Hash64.lower63 from built-ins only: md5 hex → bytes 8..15
     * little-endian (reverse the byte-pair hex order) → unsigned decimal

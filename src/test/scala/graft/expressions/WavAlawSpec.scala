@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.SparkSuite
 import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned against published reference values, plus the cross-law
   * asymmetries that distinguish it from µ-law (sign polarity, range,
   * segment-0 linearity). */
-class WavAlawSpec extends AnyFunSuite {
+class WavAlawSpec extends AnyFunSuite with SparkSuite {
 
   private def ints(a: org.apache.spark.sql.catalyst.util.ArrayData) =
     a.toIntArray().toSeq
@@ -68,8 +69,6 @@ class WavAlawSpec extends AnyFunSuite {
   }
 
   test("expressions: stateless expansion as codegen columns") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.SparkSuite
 import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rejection) and the expansion must be the CANONICAL G.711 table —
   * pinned here against the published reference values, not our own
   * arithmetic. */
-class WavMulawSpec extends AnyFunSuite {
+class WavMulawSpec extends AnyFunSuite with SparkSuite {
 
   private def ints(a: org.apache.spark.sql.catalyst.util.ArrayData) =
     a.toIntArray().toSeq
@@ -61,8 +62,6 @@ class WavMulawSpec extends AnyFunSuite {
   }
 
   test("expressions: stateless expansion as codegen columns") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.SparkSuite
 import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The WAV codec must be a REAL parser: header fields round-trip,
   * samples sign-extend, unknown chunks are skipped by chunk walking
   * (not fixed offsets), and malformed containers are rejected. */
-class WavPcm16Spec extends AnyFunSuite {
+class WavPcm16Spec extends AnyFunSuite with SparkSuite {
 
   private def ints(a: org.apache.spark.sql.catalyst.util.ArrayData) =
     a.toIntArray().toSeq
@@ -52,8 +53,6 @@ class WavPcm16Spec extends AnyFunSuite {
   }
 
   test("expressions: encode/decode as codegen columns over a DataFrame") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -1,20 +1,14 @@
 package graft.functions
 
+import graft.SparkSuite
 import graft.ids.IdMinter
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Table-driven tests for the scalar function library (F1–F4, F7, F8,
   * F14) against reference behavior, plus the codegen-native uuid5
   * column vs both the JVM implementation and golden ids. */
-class FnsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FnsSpec extends AnyFunSuite with SparkSuite {
 
   private def eval1(in: Seq[String], c: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Seq[String] = {
     import spark.implicits._

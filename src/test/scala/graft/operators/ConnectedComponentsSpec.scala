@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Correctness and round-complexity of the alternating
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * worst natural case (a long chain), which plain min-label flooding
   * would need O(n) rounds for.
   */
-class ConnectedComponentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConnectedComponentsSpec extends AnyFunSuite with SparkSuite {
 
   /** Driver-side union-find oracle. */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {

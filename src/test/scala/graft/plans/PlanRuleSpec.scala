@@ -1,25 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The RewriteCodecLengthGuards optimizer rule, proven from plans AND
   * from values: a naive guard on a codec's decoded length must leave
   * the Filter as a cheap octet_length precondition (codec runs once,
   * in the Project), and must select exactly the same rows. */
-class PlanRuleSpec extends AnyFunSuite {
+class PlanRuleSpec extends AnyFunSuite with BeforeAndAfterAll
+    with SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftExtensions.ensureRegistered(s)
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    graft.GraftExtensions.ensureRegistered(spark)
   }
 
   // parquet-backed (a local Seq would constant-fold the whole plan

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * where the contract allows). No cross-engine oracle exists — Spark's
   * HLL++ and DuckDB's approx differ by construction — so the gate is an
   * error bound against the exact answer. */
-class ApproxSpec extends AnyFunSuite {
+class ApproxSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.01"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("approx_count_distinct within 5% of exact on lineitem keys") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.SparkSuite
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * compiles to a zero-Exchange sort-merge join. At cluster scale this
   * is the difference between re-shuffling two multi-TB tables per query
   * and reading co-located buckets. */
-class BucketingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketingSpec extends AnyFunSuite with SparkSuite {
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))

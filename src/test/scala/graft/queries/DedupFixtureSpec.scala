@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with the exact expected score; identical copies must collapse into
   * one content class; unrelated docs must not pair; oversized buckets
   * must be dropped. */
-class DedupFixtureSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupFixtureSpec extends AnyFunSuite with SparkSuite {
 
   private val base = "alpha bravo charlie delta echo foxtrot golf hotel " +
     "india juliet kilo lima mike november oscar papa quebec romeo sierra " +

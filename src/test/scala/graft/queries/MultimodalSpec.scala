@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,14 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The multimodal plumbing that must be real even while decode is
   * stubbed: binary payload typing, typed metadata schema, frame
   * slicing that reassembles the asset prefix, feature range. */
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("corpus schema: binary payload + typed meta struct") {
     val c = Multimodal.corpus(spark, sfDir)

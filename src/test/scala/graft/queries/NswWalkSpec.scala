@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB oracle gates the same equivalence end-to-end; this spec
   * pins it at the walk level so a drift in the imperative arithmetic
   * (rounding mode, beam order, dedup) fails fast with a named cause. */
-class NswWalkSpec extends AnyFunSuite {
+class NswWalkSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def visitedSet(df: org.apache.spark.sql.DataFrame) = df
     .select(col("q_id").cast("long"), col("pt").cast("long"),

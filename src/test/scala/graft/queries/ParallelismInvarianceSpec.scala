@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Results must be a function of the DATA, never of the partitioning —
@@ -19,15 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * their own merge≡rebuild contracts, and their side effects would
   * race between the two sessions here.
   */
-class ParallelismInvarianceSpec extends AnyFunSuite {
+class ParallelismInvarianceSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val Sampled = Seq(
     "q01_pricing_summary", "q02_filter_topn", "q03_shipping_priority",

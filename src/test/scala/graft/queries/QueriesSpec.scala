@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every registered query runs at sf0.001 and yields rows with the
@@ -9,15 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB oracle gate (tools/verify_local.py + driver t2); this spec
   * catches empty-result and plan-breakage regressions early.
   */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("registry names are unique and every oracle key has a query") {
     val names = SparkEntry.allDefs.map(_.name)

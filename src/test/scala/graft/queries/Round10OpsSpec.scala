@@ -1,21 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Result-level contracts for the round-10 operators, each pinned
   * against an independent in-JVM recompute (never against the engine's
   * own expressions). */
-class Round10OpsSpec extends AnyFunSuite {
+class Round10OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---------------------------------------------------------------
   // q9a: batch perceptron training loop

@@ -1,20 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Result-level contracts for the round-12 operators, each pinned
   * against an independent in-JVM recompute (never against the engine's
   * own expressions). */
-class Round12OpsSpec extends AnyFunSuite {
+class Round12OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** First-8-hex of md5 as unsigned long — the cross-engine hash basis
     * the queries use, recomputed here with java.security directly. */

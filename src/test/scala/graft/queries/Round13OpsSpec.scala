@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 operators: q9t (incrementally maintained histogram quantile
@@ -8,15 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Each gets an independent replay arm (plain Scala / the scan-once
   * BM25 form) plus state-reuse and plan-evidence checks in the
   * Round9/Round12 style. */
-class Round13OpsSpec extends AnyFunSuite {
+class Round13OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def delTree(p: java.nio.file.Path): Unit = {
     def del(f: java.io.File): Unit = {

@@ -1,22 +1,15 @@
 package graft.queries
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 hardening: edge cases flagged by the r13 review (empty
   * state serves, driver-comparator shape rules, cross-engine
   * normalization). */
-class Round14OpsSpec extends AnyFunSuite {
+class Round14OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q9w rangeEstimates on an EMPTY events source returns an empty " +
     "frame of the serve shape, not an NPE") {

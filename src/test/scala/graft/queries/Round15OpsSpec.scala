@@ -1,21 +1,14 @@
 package graft.queries
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 hardening: items flagged by the r14 review — byte-basis
   * fuzzy ER over non-ASCII titles, serve-path contract placement. */
-class Round15OpsSpec extends AnyFunSuite {
+class Round15OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q9z/qb0 match non-ASCII near-dups on the UTF-8 byte basis " +
     "both engines share (r14 stripped them)") {

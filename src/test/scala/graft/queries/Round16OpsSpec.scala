@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 hardening: items flagged by the r15 review — the NSW
@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * P=8 made the graph build quadratic at scale), VersionedState must
   * not leak directory handles or fail on a re-committed batch, and
   * qb8's estimators must stay total on degenerate inputs. */
-class Round16OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round16OpsSpec extends AnyFunSuite with SparkSuite {
 
   test("qb6 partition count derives from the corpus under the " +
     "per-partition budget — bounded build at any scale") {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkSuite
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * classifier's hand-replayable round-1 update, the G.711 RIFF pad
   * byte (r16 advice #2), and walkShard's tolerance of stale stored
   * edges (r16 advice #1). */
-class Round17OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round17OpsSpec extends AnyFunSuite with SparkSuite {
 
   // ---- qc7/qc8: PII fixtures -----------------------------------------
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-19 additions and hardening: the qce mojibake repair codec
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (r17/r18 review item), the qba/qbb store-served forms' equivalence
   * with the fresh kernels, and the shared recursive-delete helper's
   * symlink safety (r18 advice). */
-class Round19OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round19OpsSpec extends AnyFunSuite with SparkSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 

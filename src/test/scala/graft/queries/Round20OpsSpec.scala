@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pipeline (fixture round-trips incl. the mixed moji+decomposed
   * refusal, stage-by-stage consistency with the solo qcc/qcf kernels
   * on unplanted rows), and the NfcNormalize ASCII byte fast path. */
-class Round20OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round20OpsSpec extends AnyFunSuite with SparkSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 

@@ -1,20 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-20 OPTIMIZATION-round equivalence pins: every serve path
   * that gained a content-addressed store or a restructured kernel this
   * round must be provably identical to the fresh computation it
   * replaced — the qba/qbb store≡fresh discipline (Round19OpsSpec). */
-class Round20OptSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round20OptSpec extends AnyFunSuite with SparkSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 

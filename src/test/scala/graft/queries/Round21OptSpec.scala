@@ -1,16 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-21 OPTIMIZATION-round pins.
   *
   * 1. The de-memoised *_train/resolve queries (q97/q9a/q5a/q48) keep
-  *    their stores ONLY for the apply twins — Round20OptSpec's
-  *    store≡fresh pins still prove the twins serve the same answer,
-  *    and the oracle pins the train queries' own outputs, so this
-  *    spec pins the remaining r21 reshapes instead:
+  *    their stores ONLY for the apply twins: neither their plan nor any
+  *    plan run while building them reads a `graft_scratch` store.
+  *    Round20OptSpec's store≡fresh pins prove the twins serve the same
+  *    answer, and the oracle pins the train queries' own outputs.
   * 2. q9t/q9i plans carry NO unpartitioned Window operator (the r20
   *    verdict's "No Partition Defined" scale-killer sweep).
   * 3. q4c's bucket self-join is a sort-merge join (NOT broadcast), so
@@ -23,16 +23,35 @@ import org.scalatest.funsuite.AnyFunSuite
   *    pre-distinct before the candidate union can remove zero rows;
   *    only the cross-layer overlap needs the union's distinct.
   */
-class Round21OptSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round21OptSpec extends AnyFunSuite with SparkSuite {
 
   val sfDir = "/root/testdata/sf0.001"
+
+  test("q97/q9a/q5a/q48 train or resolve per call: no plan they run " +
+    "reads a graft_scratch store") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    for (name <- Seq("q97_bpe_train", "q9a_perceptron_train",
+        "q5a_kmeans_converge", "q48_dup_clusters")) {
+      // the capture sees the checkpoints run during construction; the
+      // driver-side training loops collect, which only `executions`
+      // sees, over persisted frames, whose scans only the analyzed plan
+      // still shows
+      val ((df, checkpoints), ran) = graft.SparkEvents.executions(spark)(
+        graft.PlanAudit.buildCapturingExecutions(spark,
+          () => graft.SparkEntry.queries(name)(spark, sfDir)))
+      val reads = (df.queryExecution +: (checkpoints ++ ran))
+        .flatMap(qe => Seq(qe.analyzed, qe.optimizedPlan))
+        .flatMap(_.collectWithSubqueries {
+          case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+            r.location.rootPaths
+        }.flatten).distinct
+      val stored = reads.filter(p => java.nio.file.Paths.get(p.toUri)
+        .normalize.startsWith(Tables.scratchRoot))
+      assert(reads.nonEmpty, s"$name: no file scan seen")
+      assert(stored.isEmpty, s"$name reads a store: ${stored.mkString(", ")}")
+    }
+  }
 
   test("q9t: the materialized quantile plan windows by bucket, never " +
     "by nothing (the r20 single-partition cumsum is gone)") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * is the DuckDB oracle's job; these pin the *shape* claims each
   * operator's doc makes (conservation, thresholds, bounds).
   */
-class Round4OpsSpec extends AnyFunSuite {
+class Round4OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def run(name: String) =
     graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,21 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Result-level contracts for the round-7 composition queries, beyond
   * their DuckDB oracles: the equivalences their docs claim, asserted
   * against the OTHER implementation of the same semantics.
   */
-class Round7OpsSpec extends AnyFunSuite {
+class Round7OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def run(name: String) =
     graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,21 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Result-level contracts for the round-8 operators, beyond their
   * DuckDB oracles: cross-implementation agreement (q69 vs q63) and the
   * algorithmic invariant the k-means loop exists to deliver (monotone
   * inertia descent). */
-class Round8OpsSpec extends AnyFunSuite {
+class Round8OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def run(name: String) =
     graft.SparkEntry.queries(name)(spark, sfDir)

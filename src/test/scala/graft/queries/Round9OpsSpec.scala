@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * corpus-side sketch work while the corpus is unchanged), proven from
   * the reuse flag, the reused scan's executed plan, and run-to-run
   * result identity. */
-class Round9OpsSpec extends AnyFunSuite {
+class Round9OpsSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.01"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def delTree(p: java.nio.file.Path): Unit = {
     def del(f: java.io.File): Unit = {

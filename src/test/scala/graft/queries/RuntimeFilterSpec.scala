@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * is the difference between shuffling the whole fact table and
   * shuffling the ~matching fraction. Proven from the executed plan and
   * gated on the answer being identical with the filter disabled. */
-class RuntimeFilterSpec extends AnyFunSuite {
+class RuntimeFilterSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def joined() = {
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")

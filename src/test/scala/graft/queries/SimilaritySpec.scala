@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (top-5 cosines ≈ 0.3-0.45, no real clusters), which is the
   * worst case for random-projection LSH — the thresholds encode an
   * honest floor for that regime, not a marketing number. */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.01"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q51 LSH recall ≥ 0.4 vs exact top-5, candidates < 60% of brute force") {
     val exact = Similarity.knnExact(spark, sfDir)

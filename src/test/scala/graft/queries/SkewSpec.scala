@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * key, and (b) still produce exactly the unsalted answer. This is the
   * mechanism SCALING.md's "salting for skew" claim rests on.
   */
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends AnyFunSuite with SparkSuite {
   private val K = Similarity.K
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** 95%-skewed scored rows in topKPerQuery's input shape: q_id 0 holds
     * 9500 of 10000 candidates; cold keys start at 1 so hot and cold

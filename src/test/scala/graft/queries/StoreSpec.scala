@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkSuite
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
@@ -7,7 +8,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,16 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * JVMs), replacement of a mismatched store, the write-free warm path,
   * the `sourceStamp` identity decision, and q9t's refusal to serve from
   * a histogram that lost a bucket. */
-class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StoreSpec extends AnyFunSuite with BeforeAndAfterAll with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private val Prefix = "storespec"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def tmpRoot(name: String): Path =
     Paths.get(System.getProperty("java.io.tmpdir"), name)

@@ -1,7 +1,8 @@
 package graft.sinks
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeserializeToObject,
   LogicalPlan, MapPartitions, SerializeFromObject}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
@@ -16,13 +17,8 @@ import scala.jdk.CollectionConverters._
   * upsert parity with `fhir_etl/utils.py:101-135` — append-new,
   * keep-or-update existing, last-wins within a batch, idempotence.
   * Every test also checks that the sinks leave no temp dir behind. */
-class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NdjsonSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
+    with SparkSuite {
 
   private def df(rows: (String, Int)*) = {
     import spark.implicits._

@@ -1,21 +1,15 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.etl.Gtex
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S3 DataSourceV2: parallel page-partitioned scan delivers every
   * record of every page exactly once, and the downstream transform is
   * source-agnostic (page source ≡ TSV source). */
-class RestPagesSpec extends AnyFunSuite {
+class RestPagesSpec extends AnyFunSuite with SparkSuite {
 
   private val pages = s"${graft.queries.FhirEtl.FixtureDir}/gtex_subject_pages"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("one input partition per page, 980 records total") {
     val df = spark.read.format("graft.sources.RestPagesSource")

@@ -1,20 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming parity (SURVEY §2.7): EventStream.windowedCounts
   * is ONE transform shared by batch and streaming; draining the finite
   * file stream must produce exactly the batch result. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("streaming tumbling-window counts == batch counts over events") {
     // the file stream source wants a directory; stage the single file
@@ -781,9 +774,6 @@ class StreamingSpec extends AnyFunSuite {
     // as two event-time-ordered triggers split at the median ts, so
     // every second-trigger event's (seq, run_cents) depends on
     // ValueState carried from trigger 1 (RocksDB-backed)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val all = EventStream.readBatch(spark, s"$sfDir/events.parquet")
       .filter(col("user_id") < 20)
     val midNs = all.stat.approxQuantile("ts", Array(0.5), 0.0).head.toLong
@@ -839,9 +829,6 @@ class StreamingSpec extends AnyFunSuite {
     // TTL over the same staging must see CARRIED state (seq continues:
     // TTL is an age-out, not an always-drop). Both drain the identical
     // multi-key slice (user_id < 20), so per-key isolation rides along.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val all = EventStream.readBatch(spark, s"$sfDir/events.parquet")
       .filter(col("user_id") < 20)
     val midNs = all.stat.approxQuantile("ts", Array(0.5), 0.0).head.toLong
