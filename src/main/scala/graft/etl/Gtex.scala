@@ -193,21 +193,26 @@ object Gtex {
           col("fs_name").as("display")).as("valueCoding"))).as("profile")))
         .as("content"))
 
-  /** E2 end-to-end: all six NDJSON outputs (gtex_fhirizer.py:410-423),
-    * overwritten in one Spark job ([[graft.sinks.Ndjson.writeAll]]);
-    * GTEx's Group reads fixtures, not the job's own output. */
-  def runAll(spark: SparkSession, fixtureDir: String, outDir: String): Unit = {
+  /** The six output types (gtex_fhirizer.py:410-423) as
+    * `(resourceType -> frame)`, built from the fixtures; GTEx's Group
+    * reads fixtures, not the job's own output. */
+  def resources(spark: SparkSession, fixtureDir: String): Seq[(String, DataFrame)] = {
     val subjects = readTsv(spark, s"$fixtureDir/gtex_subjects.tsv")
     val samples = readTsv(spark, s"$fixtureDir/gtex_samples.tsv")
-    graft.sinks.Ndjson.writeAll(outDir, Seq(
+    Seq(
       "Patient" -> patients(subjects),
       "ResearchSubject" -> researchSubjects(subjects),
       "Specimen" -> specimens(samples),
       "ResearchStudy" -> researchStudy(spark),
       "DocumentReference" -> documentReferences(
         readFileList(spark, s"$fixtureDir/gtex_filelist.json")),
-      "Group" -> group(readTsv(spark, s"$fixtureDir/gtex_sample_attrs.tsv"), samples)))
+      "Group" -> group(readTsv(spark, s"$fixtureDir/gtex_sample_attrs.tsv"), samples))
   }
+
+  /** E2 end-to-end: all six [[resources]] overwritten in one Spark job
+    * ([[graft.sinks.Ndjson.writeAll]]). */
+  def runAll(spark: SparkSession, fixtureDir: String, outDir: String): Unit =
+    graft.sinks.Ndjson.writeAll(outDir, resources(spark, fixtureDir))
 
   // ------------------------------------------------------------------
   // Group: J3 intersection (stripped SAMPID ∩ aliquot ids) + A5

@@ -229,6 +229,14 @@ object OneKg {
       .select($"ident.value".as("sample_id"))
   }
 
+  /** The specimen ids as the engine takes them: the `Sample`s of the
+    * sample-info frame. The reference takes them from the Specimen.ndjson
+    * its own job writes ([[specimenSampleIds]]), but that set is the same
+    * one: each Specimen's `TechSystem` identifier value IS its `Sample`,
+    * and a null `Sample` drops out on both paths. */
+  def sampleIds(sampleInfo: DataFrame): DataFrame =
+    sampleInfo.select(col("Sample").as("sample_id"))
+
   /** The Group resource: header ids ∩ specimen ids → member array.
     * Members are sorted for determinism — the reference iterates a
     * Python set whose order is hash-seed-dependent, so order is not
@@ -252,11 +260,7 @@ object OneKg {
     * plain write, so they join the one job; a target that already exists
     * (a transform into a used directory) is upserted instead.
     *
-    * Group members are header ids ∩ the `Sample`s of the sample-info
-    * frame. The reference takes the second set from the Specimen.ndjson
-    * this same job writes (S7 over its own output), but that set is the
-    * same one: each Specimen's `TechSystem` identifier value IS its
-    * `Sample`, and a null `Sample` drops out on both paths. */
+    * Group members are header ids ∩ [[sampleIds]]. */
   def runAll(spark: SparkSession, fixtureDir: String, outDir: String): Unit = {
     val si = readSampleInfo(spark, s"$fixtureDir/onekg_sample_info.tsv")
     val (existing, fresh) = Seq(
@@ -264,7 +268,7 @@ object OneKg {
         readFtpListing(spark, s"$fixtureDir/onekg_ftp_listing.tsv")),
       "Group" -> group(spark,
         readHeaderSampleIds(spark, s"$fixtureDir/onekg_vcf_header.txt"),
-        si.select(col("Sample").as("sample_id")))
+        sampleIds(si))
     ).partition { case (t, _) => Files.exists(Paths.get(outDir, s"$t.ndjson")) }
     Ndjson.writeAll(outDir, Seq(
       "Patient" -> patients(si),

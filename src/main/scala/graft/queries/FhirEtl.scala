@@ -122,7 +122,7 @@ object FhirEtl extends Registry {
       (s, _) => {
         val g = OneKg.group(s,
           OneKg.readHeaderSampleIds(s, s"$FixtureDir/onekg_vcf_header.txt"),
-          OneKg.specimenSampleIds(s, s"$GoldenDir/Specimen.ndjson"))
+          OneKg.sampleIds(sampleInfo(s)))
         g.select(
           col("id"),
           size(col("member")).as("n_members"),
@@ -137,7 +137,7 @@ object FhirEtl extends Registry {
              |  list_aggregate([x.entity.reference for x in member], 'max') AS max_member
              |FROM read_json('$GoldenDir/Group.ndjson',
              |  format='newline_delimited', union_by_name=true)""".stripMargin),
-      doc = "S7 NDJSON scan + J1 semi-join + A5 single-group collect"),
+      doc = "J1 semi-join (header ids ∩ sample-info ids) + A5 single-group collect"),
 
     // ------------------------------------------------------------------
     QueryDef(
@@ -157,8 +157,8 @@ object FhirEtl extends Registry {
       "q26_onekg_reconciliation",
       (s, _) => OneKg.reconciliation(
         OneKg.readHeaderSampleIds(s, s"$FixtureDir/onekg_vcf_header.txt"),
-        OneKg.specimenSampleIds(s, s"$GoldenDir/Specimen.ndjson")),
-      // fixture plants exactly 3 header ids absent from Specimen.ndjson
+        OneKg.sampleIds(sampleInfo(s))),
+      // fixture plants exactly 3 header ids absent from the sample info
       Some(s"""SELECT CAST(len(member) + 3 AS BIGINT) AS n_header,
              |  CAST(len(member) AS BIGINT) AS n_found,
              |  CAST(3 AS BIGINT) AS n_missing
@@ -399,7 +399,13 @@ object FhirEtl extends Registry {
     // ------------------------------------------------------------------
     QueryDef(
       "q70_validate_onekg",
-      (s, _) => graft.etl.Validate.summary(s, GoldenDir),
+      // the reference's transform-then-validate flow (cli.py): validate
+      // the directory the engine has just written, as q73 does
+      (s, _) => {
+        val out = Tables.scratchDir("q70_validate_onekg")
+        OneKg.runAll(s, FixtureDir, out)
+        graft.etl.Validate.summary(s, out)
+      },
       Some(s"""SELECT * FROM (
              |  SELECT 'DocumentReference' AS resource_type, count(*) AS n_valid
              |  FROM read_json('$GoldenDir/DocumentReference.ndjson', format='newline_delimited', union_by_name=true)
@@ -409,7 +415,7 @@ object FhirEtl extends Registry {
              |  UNION ALL SELECT 'ResearchSubject', count(*) FROM read_json('$GoldenDir/ResearchSubject.ndjson', format='newline_delimited', union_by_name=true)
              |  UNION ALL SELECT 'Specimen', count(*) FROM read_json('$GoldenDir/Specimen.ndjson', format='newline_delimited', union_by_name=true)
              |) ORDER BY resource_type""".stripMargin),
-      doc = "V3 directory validation — README.md:35 count table"),
+      doc = "V3 validation of the engine-written 1KG directory — README.md:35 count table"),
 
     // ------------------------------------------------------------------
     // q73/q74: the END-TO-END pipelines through the driver gate — runAll
@@ -520,7 +526,14 @@ object FhirEtl extends Registry {
 
     QueryDef(
       "q71_validate_gtex",
-      (s, _) => graft.etl.Validate.summary(s, GtexGoldenDir),
+      // validates an engine-written directory of the five types whose
+      // goldens exist: the golden GTEx Specimen.ndjson is elided upstream
+      (s, _) => {
+        val out = Tables.scratchDir("q71_validate_gtex")
+        graft.sinks.Ndjson.writeAll(out,
+          Gtex.resources(s, FixtureDir).filterNot(_._1 == "Specimen"))
+        graft.etl.Validate.summary(s, out)
+      },
       Some(s"""SELECT * FROM (
              |  SELECT 'DocumentReference' AS resource_type, count(*) AS n_valid
              |  FROM read_json('$GtexGoldenDir/DocumentReference.ndjson', format='newline_delimited', union_by_name=true)
@@ -529,6 +542,6 @@ object FhirEtl extends Registry {
              |  UNION ALL SELECT 'ResearchStudy', count(*) FROM read_json('$GtexGoldenDir/ResearchStudy.ndjson', format='newline_delimited', union_by_name=true)
              |  UNION ALL SELECT 'ResearchSubject', count(*) FROM read_json('$GtexGoldenDir/ResearchSubject.ndjson', format='newline_delimited', union_by_name=true)
              |) ORDER BY resource_type""".stripMargin),
-      doc = "V3 directory validation — README.md:38 count table")
+      doc = "V3 validation of an engine-written GTEx directory — README.md:38 count table")
   )
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** GTEx golden parity. Patient / ResearchSubject / DocumentReference /
   * ResearchStudy are full-tree-compared against
-  * /root/reference/fhir_etl/GTEx/META. Specimen.ndjson is elided
+  * `FhirEtl.GtexGoldenDir`. Specimen.ndjson is elided
   * upstream (.MISSING_LARGE_BLOBS), so Specimen and Group membership
   * run on the synthetic fixtures: their minting chain and shapes are
   * pinned here, and the Group's constant-derived fields (id,
@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GtexGoldenSpec extends AnyFunSuite with SparkSuite {
 
   private val fixtures = graft.queries.FhirEtl.FixtureDir
-  private val golden = "/root/reference/fhir_etl/GTEx/META"
+  private val golden = graft.queries.FhirEtl.GtexGoldenDir
 
   private val mapper = new ObjectMapper()
   mapper.configure(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)
@@ -41,18 +41,22 @@ class GtexGoldenSpec extends AnyFunSuite with SparkSuite {
     Gtex.readTsv(spark, s"$fixtures/gtex_subjects.tsv")
 
   test("Patient.ndjson: 980 records incl. deceasedBoolean + age/dueto exts") {
+    Goldens.assumePresent(golden)
     assertParity(Gtex.patients(subjects), "Patient.ndjson")
   }
 
   test("ResearchSubject.ndjson: 980 records") {
+    Goldens.assumePresent(golden)
     assertParity(Gtex.researchSubjects(subjects), "ResearchSubject.ndjson")
   }
 
   test("ResearchStudy.ndjson: singleton") {
+    Goldens.assumePresent(golden)
     assertParity(Gtex.researchStudy(spark), "ResearchStudy.ndjson")
   }
 
   test("DocumentReference.ndjson: 49 records via P14 fileset unnest") {
+    Goldens.assumePresent(golden)
     assertParity(
       Gtex.documentReferences(
         Gtex.readFileList(spark, s"$fixtures/gtex_filelist.json")),
@@ -60,6 +64,7 @@ class GtexGoldenSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Group: constant-derived fields golden-match; membership = J3 ∩") {
+    Goldens.assumePresent(golden)
     val g = Gtex.group(
       Gtex.readTsv(spark, s"$fixtures/gtex_sample_attrs.tsv"),
       Gtex.readTsv(spark, s"$fixtures/gtex_samples.tsv"))

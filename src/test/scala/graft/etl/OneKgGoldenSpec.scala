@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 /** Full-tree golden parity: every resource our 1KG pipeline emits equals
   * the reference's committed golden output
-  * (/root/reference/fhir_etl/oneKgenomes/META) — every nested field,
+  * (`FhirEtl.GoldenDir`) — every nested field,
   * every minted uuid5 id, every frozen string quirk. JSON is compared
   * canonically (sorted keys), since the goldens' key order is pydantic
   * field order and ours is schema order; Group.member is order-
@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
 class OneKgGoldenSpec extends AnyFunSuite with SparkSuite {
 
   private val fixtures = graft.queries.FhirEtl.FixtureDir
-  private val golden = "/root/reference/fhir_etl/oneKgenomes/META"
+  private val golden = graft.queries.FhirEtl.GoldenDir
 
   private val mapper = new ObjectMapper()
   mapper.configure(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS, true)
@@ -45,22 +45,27 @@ class OneKgGoldenSpec extends AnyFunSuite with SparkSuite {
     OneKg.readSampleInfo(spark, s"$fixtures/onekg_sample_info.tsv")
 
   test("Patient.ndjson: 3,500 records byte-equivalent (canonical JSON)") {
+    Goldens.assumePresent(golden)
     assertParity(OneKg.patients(sampleInfo), "Patient.ndjson")
   }
 
   test("ResearchSubject.ndjson: 3,500 records") {
+    Goldens.assumePresent(golden)
     assertParity(OneKg.researchSubjects(sampleInfo), "ResearchSubject.ndjson")
   }
 
   test("Specimen.ndjson: 3,500 records") {
+    Goldens.assumePresent(golden)
     assertParity(OneKg.specimens(sampleInfo), "Specimen.ndjson")
   }
 
   test("ResearchStudy.ndjson: singleton") {
+    Goldens.assumePresent(golden)
     assertParity(OneKg.researchStudy(spark), "ResearchStudy.ndjson")
   }
 
   test("DocumentReference.ndjson: 48 records incl. int64 sizes") {
+    Goldens.assumePresent(golden)
     assertParity(
       OneKg.documentReferences(
         OneKg.readFtpListing(spark, s"$fixtures/onekg_ftp_listing.tsv")),
@@ -68,6 +73,7 @@ class OneKgGoldenSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Group.ndjson: 2,504 members, set-equal, id + all fields equal") {
+    Goldens.assumePresent(golden)
     val ours = OneKg.group(spark,
       OneKg.readHeaderSampleIds(spark, s"$fixtures/onekg_vcf_header.txt"),
       OneKg.specimenSampleIds(spark, s"$golden/Specimen.ndjson"))
@@ -87,6 +93,7 @@ class OneKgGoldenSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("reconciliation: 2,507 header ids = 2,504 found + 3 missing") {
+    Goldens.assumePresent(golden)
     val row = OneKg.reconciliation(
       OneKg.readHeaderSampleIds(spark, s"$fixtures/onekg_vcf_header.txt"),
       OneKg.specimenSampleIds(spark, s"$golden/Specimen.ndjson"))

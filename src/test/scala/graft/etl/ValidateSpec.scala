@@ -22,20 +22,26 @@ class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
     Validate.summary(spark, dir).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  private val golden = graft.queries.FhirEtl.GoldenDir
+  private val gtexGolden = graft.queries.FhirEtl.GtexGoldenDir
+
   test("V3 on the golden 1KG META dir reproduces README.md:35") {
-    assert(summaryMap("/root/reference/fhir_etl/oneKgenomes/META") == Map(
+    Goldens.assumePresent(golden)
+    assert(summaryMap(golden) == Map(
       "DocumentReference" -> 48L, "Specimen" -> 3500L,
       "ResearchStudy" -> 1L, "ResearchSubject" -> 3500L,
       "Group" -> 1L, "Patient" -> 3500L))
   }
 
   test("V3 on the golden GTEx META dir reproduces README.md:38 (minus elided Specimen)") {
-    assert(summaryMap("/root/reference/fhir_etl/GTEx/META") == Map(
+    Goldens.assumePresent(gtexGolden)
+    assert(summaryMap(gtexGolden) == Map(
       "DocumentReference" -> 49L, "ResearchStudy" -> 1L,
       "ResearchSubject" -> 980L, "Group" -> 1L, "Patient" -> 980L))
   }
 
   test("end-to-end 1KG job: sinks + validate + golden-file equality") {
+    Goldens.assumePresent(golden)
     val out = Files.createTempDirectory("onekg-e2e").toString
     OneKg.runAll(spark, graft.queries.FhirEtl.FixtureDir, out)
     assert(summaryMap(out) == Map(
@@ -53,7 +59,7 @@ class ValidateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
         mapper.treeToValue(mapper.readTree(l), classOf[Object])))
       .toSeq.sorted
     assert(canonFile(s"$out/Patient.ndjson") ==
-      canonFile("/root/reference/fhir_etl/oneKgenomes/META/Patient.ndjson"))
+      canonFile(s"$golden/Patient.ndjson"))
   }
 
   test("end-to-end GTEx job: sinks + validate counts") {
