@@ -1,111 +1,111 @@
 package graft
 
-import graft.expressions.{AnchorWindowsExpr, MojibakeRepairExpr, NfcNormalizeExpr, PhraseMatchExpr, PhraseRedactExpr, SeedWindowsExpr,AviDibEncodeExpr, AviDibFramesExpr, AviRle8EncodeExpr, AviRle8PixelsExpr, BmpHeightExpr, KmvSketchAgg, TopKPairsAgg, MgSketchAgg, BmpRgb24EncodeExpr, BmpRgb24PixelsExpr, BmpWidthExpr, BpeMergeWordExpr, JpegDcCategoriesExpr, JpegGray8EncodeExpr, JpegGray8EncodeRstExpr, JpegGray8PixelsExpr, JpegHeightExpr, JpegRgbPixelsExpr, JpegRstCountExpr, JpegWidthExpr, JpegYcbcr420EncodeExpr, PngAdam7EncodeExpr, PngAdam7FilterTypesExpr, PngAdam7PixelsExpr, PngFilterTypesExpr, PngGray8EncodeExpr, PngGray8PixelsExpr, PngHeightExpr, PngPaletteEncodeExpr, PngPaletteRgbExpr, PngRgb24EncodeExpr, PngRgb24PixelsExpr, PngWidthExpr, JaccardSortedExpr, MinHashBandsExpr, ShingleHashesExpr, ShingleStringsExpr, SimHash64Expr, VectorDotExpr, WavAlawEncodeExpr, WavAlawSamplesExpr, WavImaEncodeExpr, WavImaSamplesExpr, WavMulawEncodeExpr, WavMulawSamplesExpr, WavPcm16EncodeExpr, WavPcm16SamplesExpr, WavSampleRateExpr}
+import graft.expressions.{AnchorWindowsExpr, BpeMergeWordExpr, CallSig, KmvSketchAgg, MgSketchAgg, MinHashBandsExpr, PhraseMatchExpr, PhraseRedactExpr, SeedWindowsExpr, ShingleHashesExpr, ShingleStringsExpr, StaticCall, TopKPairsAgg}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Engine extension point — registers graft's custom Catalyst
-  * expressions with a session, either via the canonical
+/** Engine extension point: registers [[GraftExtensions.functions]] and
+  * the codec-guard optimizer rule with a session, either through the
   * `spark.sql.extensions=graft.GraftExtensions` config or lazily with
-  * [[GraftExtensions.ensureRegistered]] (used defensively by queries so
-  * they work on harness-created sessions too). */
+  * [[GraftExtensions.ensureRegistered]] (which queries call so they work
+  * on sessions created without the config too). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.minhashBands)
-    ext.injectFunction(GraftExtensions.simhash64)
-    ext.injectFunction(GraftExtensions.vecDot)
-    ext.injectFunction(GraftExtensions.shingleHashes)
-    ext.injectFunction(GraftExtensions.shingleStrings)
-    ext.injectFunction(GraftExtensions.jaccardSorted)
-    ext.injectFunction(GraftExtensions.wavEncode)
-    ext.injectFunction(GraftExtensions.wavSamples)
-    ext.injectFunction(GraftExtensions.wavRate)
-    ext.injectFunction(GraftExtensions.wavImaEncode)
-    ext.injectFunction(GraftExtensions.wavImaSamples)
-    ext.injectFunction(GraftExtensions.bmpEncode)
-    ext.injectFunction(GraftExtensions.bmpPixels)
-    ext.injectFunction(GraftExtensions.bmpWidth)
-    ext.injectFunction(GraftExtensions.bmpHeight)
-    ext.injectFunction(GraftExtensions.bpeMergeWord)
-    ext.injectFunction(GraftExtensions.aviEncode)
-    ext.injectFunction(GraftExtensions.aviFrames)
-    ext.injectFunction(GraftExtensions.aviRleEncode)
-    ext.injectFunction(GraftExtensions.aviRlePixels)
-    ext.injectFunction(GraftExtensions.kmvSketch)
-    ext.injectFunction(GraftExtensions.topkPairs)
-    ext.injectFunction(GraftExtensions.mgSketch)
-    ext.injectFunction(GraftExtensions.anchorWindows)
-    ext.injectFunction(GraftExtensions.seedWindows)
-    ext.injectFunction(GraftExtensions.fixMojibake)
-    ext.injectFunction(GraftExtensions.nfcNormalize)
-    ext.injectFunction(GraftExtensions.phraseMatches)
-    ext.injectFunction(GraftExtensions.phraseRedact)
-    ext.injectFunction(GraftExtensions.wavMulawEncode)
-    ext.injectFunction(GraftExtensions.wavMulawSamples)
-    ext.injectFunction(GraftExtensions.wavAlawEncode)
-    ext.injectFunction(GraftExtensions.wavAlawSamples)
-    ext.injectFunction(GraftExtensions.pngEncode)
-    ext.injectFunction(GraftExtensions.pngPixels)
-    ext.injectFunction(GraftExtensions.pngRgbEncode)
-    ext.injectFunction(GraftExtensions.pngRgbPixels)
-    ext.injectFunction(GraftExtensions.pngPaletteEncode)
-    ext.injectFunction(GraftExtensions.pngPaletteRgb)
-    ext.injectFunction(GraftExtensions.pngFilterTypes)
-    ext.injectFunction(GraftExtensions.pngWidth)
-    ext.injectFunction(GraftExtensions.pngHeight)
-    ext.injectFunction(GraftExtensions.pngAdam7Encode)
-    ext.injectFunction(GraftExtensions.pngAdam7Pixels)
-    ext.injectFunction(GraftExtensions.pngAdam7FilterTypes)
-    ext.injectFunction(GraftExtensions.jpegEncode)
-    ext.injectFunction(GraftExtensions.jpegEncodeRst)
-    ext.injectFunction(GraftExtensions.jpegPixels)
-    ext.injectFunction(GraftExtensions.jpegDcCategories)
-    ext.injectFunction(GraftExtensions.jpegWidth)
-    ext.injectFunction(GraftExtensions.jpegHeight)
-    ext.injectFunction(GraftExtensions.jpegRstCount)
-    ext.injectFunction(GraftExtensions.jpegYcbcrEncode)
-    ext.injectFunction(GraftExtensions.jpegRgbPixels)
-    // optimizer rule: a guard on a codec's DECODED length becomes the
-    // exact byte-length precondition on the raw payload, so the codec
-    // never runs inside a Filter (the r13 q8h double-decode class,
-    // also manufactured by InferFiltersFromGenerate for explodes)
+    GraftExtensions.functions.foreach(f => ext.injectFunction(f.entry))
+    // a guard on a codec's DECODED length becomes the exact byte-length
+    // precondition on the raw payload, so the codec never runs inside a
+    // Filter (q8h's double decode; InferFiltersFromGenerate makes the
+    // same guard for explodes)
     ext.injectOptimizerRule(_ => graft.plans.RewriteCodecLengthGuards)
   }
 }
 
 object GraftExtensions {
 
-  private val minhashBands: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_bands"),
-    new ExpressionInfo(classOf[MinHashBandsExpr].getName, "minhash_bands"),
-    (args: Seq[Expression]) => {
-      def intArg(e: Expression, default: Int): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case _ => default
-      }
-      args match {
-        case Seq(text) => MinHashBandsExpr(text, 3, 12, 4)
-        case Seq(text, k, nh, nb) =>
-          MinHashBandsExpr(text, intArg(k, 3), intArg(nh, 12), intArg(nb, 4))
-        case _ => throw new IllegalArgumentException(
-          "minhash_bands(text[, k, numHashes, numBands])")
-      }
-    })
+  /** One SQL function: its name, the class that implements it, the
+    * argument counts it takes, and its builder, which runs only on one
+    * of those counts. */
+  final case class Fn(name: String, impl: Class[_], arities: Seq[Int],
+      build: Seq[Expression] => Expression) {
+    def builder(args: Seq[Expression]): Expression = {
+      if (!arities.contains(args.length))
+        throw new IllegalArgumentException(s"$name: wrong number of " +
+          s"arguments: expected ${arities.mkString(" or ")}, got ${args.length}")
+      build(args)
+    }
+    val entry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(impl.getName, name), builder)
+  }
 
-  private val simhash64: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash64"),
-    new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-    (args: Seq[Expression]) => SimHash64Expr(args.head))
+  private val bin = Seq(BinaryType)
+  private val int = Seq(IntegerType)
+  private val str = Seq(StringType)
+  private val ints = ArrayType(IntegerType, containsNull = false)
 
-  private val vecDot: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[VectorDotExpr].getName, "vec_dot"),
-    (args: Seq[Expression]) => VectorDotExpr(args(0), args(1)))
+  private def sig(name: String, target: String, result: DataType,
+      inputs: Seq[DataType]*): CallSig =
+    CallSig(name, inputs, result, s"graft.expressions.$target")
+
+  /** The functions that are one null-propagating static call. */
+  val calls: Seq[CallSig] = Seq(
+    sig("simhash64", "SimHash64.compute", LongType, str),
+    sig("nfc_normalize", "NfcNormalize.eval", StringType, str),
+    sig("fix_mojibake", "MojibakeRepair.eval", StructType(Seq(
+      StructField("fixed", StringType, nullable = false),
+      StructField("iters", IntegerType, nullable = false))), str),
+    sig("vec_dot", "VectorDot.compute", DoubleType,
+      Seq(ArrayType(DoubleType, true), ArrayType(DoubleType, false)),
+      Seq(ArrayType(DoubleType, true), ArrayType(DoubleType, false))),
+    // arrays that may hold nulls are rejected: the merge reads primitive
+    // longs, so a null slot would read as 0. Sorted, distinct elements
+    // are the input contract (shingle_hashes makes them), unchecked here
+    sig("jaccard_sorted", "ShingleJaccard.jaccardSorted", DoubleType,
+      Seq(ArrayType(LongType, false)), Seq(ArrayType(LongType, false))),
+    sig("wav_pcm16_encode", "WavPcm16.encode", BinaryType, bin, int),
+    sig("wav_pcm16_samples", "WavPcm16.samples", ints, bin),
+    sig("wav_sample_rate", "WavPcm16.sampleRate", IntegerType, bin),
+    sig("wav_ima_encode", "WavImaAdpcm.encode", BinaryType, bin, int),
+    sig("wav_ima_samples", "WavImaAdpcm.samples", ints, bin),
+    sig("wav_mulaw_encode", "WavMulaw.encode", BinaryType, bin, int),
+    sig("wav_mulaw_samples", "WavMulaw.samples", ints, bin),
+    sig("wav_alaw_encode", "WavAlaw.encode", BinaryType, bin, int),
+    sig("wav_alaw_samples", "WavAlaw.samples", ints, bin),
+    sig("bmp_rgb24_encode", "BmpRgb24.encode", BinaryType, bin, int),
+    sig("bmp_rgb24_pixels", "BmpRgb24.pixels", ints, bin),
+    sig("bmp_width", "BmpRgb24.width", IntegerType, bin),
+    sig("bmp_height", "BmpRgb24.height", IntegerType, bin),
+    sig("avi_dib_encode", "AviDib.encode", BinaryType, bin, int),
+    sig("avi_dib_frames", "AviDib.frames",
+      ArrayType(BinaryType, containsNull = false), bin),
+    sig("avi_rle8_encode", "AviRle8.encode", BinaryType, bin),
+    sig("avi_rle8_pixels", "AviRle8.pixels", ints, bin),
+    sig("png_gray8_encode", "PngGray8.encode", BinaryType, bin, int),
+    sig("png_gray8_pixels", "PngGray8.pixels", ints, bin),
+    sig("png_filter_types", "PngGray8.filterTypes", ints, bin),
+    sig("png_rgb24_encode", "PngGray8.encodeRgb24", BinaryType, bin, int),
+    sig("png_rgb24_pixels", "PngGray8.pixelsRgb24", ints, bin),
+    sig("png_palette_encode", "PngGray8.encodePalette", BinaryType, bin, int),
+    sig("png_palette_rgb", "PngGray8.pixelsPaletteRgb", ints, bin),
+    sig("png_width", "PngGray8.width", IntegerType, bin),
+    sig("png_height", "PngGray8.height", IntegerType, bin),
+    sig("png_adam7_encode", "PngGray8.encodeAdam7", BinaryType, bin, int),
+    sig("png_adam7_pixels", "PngGray8.pixelsAdam7", ints, bin),
+    sig("png_adam7_filter_types", "PngGray8.filterTypesAdam7", ints, bin),
+    sig("jpeg_gray8_encode", "JpegGray8.encode", BinaryType, bin, int),
+    sig("jpeg_gray8_encode_rst", "JpegGray8.encodeRestart", BinaryType,
+      bin, int, int),
+    sig("jpeg_ycbcr420_encode", "JpegGray8.encodeYcbcr420", BinaryType,
+      bin, int, int, int),
+    sig("jpeg_gray8_pixels", "JpegGray8.pixels", ints, bin),
+    sig("jpeg_rgb_pixels", "JpegGray8.pixelsRgb", ints, bin),
+    sig("jpeg_dc_categories", "JpegGray8.dcCategories", ints, bin),
+    sig("jpeg_width", "JpegGray8.width", IntegerType, bin),
+    sig("jpeg_height", "JpegGray8.height", IntegerType, bin),
+    sig("jpeg_rst_count", "JpegGray8.rstCount", IntegerType, bin))
 
   // k must be a compile-time constant but any foldable integral form
   // is fine (3, 3L, 1+2, CAST(3 AS INT)); k < 1 is meaningless (the
@@ -124,409 +124,79 @@ object GraftExtensions {
     k
   }
 
-  private val shingleHashes: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[ShingleHashesExpr].getName, "shingle_hashes"),
-    (args: Seq[Expression]) => args match {
-      case Seq(text) => ShingleHashesExpr(text, 3)
-      case Seq(text, kExpr) =>
-        ShingleHashesExpr(text, constK("shingle_hashes", kExpr))
-      case _ => throw new IllegalArgumentException("shingle_hashes(text[, k])")
-    })
-
-  private val shingleStrings: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_strings"),
-    new ExpressionInfo(classOf[ShingleStringsExpr].getName, "shingle_strings"),
-    (args: Seq[Expression]) => args match {
-      case Seq(text) => ShingleStringsExpr(text, 3)
-      case Seq(text, kExpr) =>
-        ShingleStringsExpr(text, constK("shingle_strings", kExpr))
-      case _ => throw new IllegalArgumentException("shingle_strings(text[, k])")
-    })
-
-  private val jaccardSorted: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jaccard_sorted"),
-    new ExpressionInfo(classOf[JaccardSortedExpr].getName, "jaccard_sorted"),
-    (args: Seq[Expression]) => JaccardSortedExpr(args(0), args(1)))
-
-  private val wavEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_pcm16_encode"),
-    new ExpressionInfo(classOf[WavPcm16EncodeExpr].getName, "wav_pcm16_encode"),
-    (args: Seq[Expression]) => WavPcm16EncodeExpr(args(0), args(1)))
-
-  private val wavSamples: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_pcm16_samples"),
-    new ExpressionInfo(classOf[WavPcm16SamplesExpr].getName, "wav_pcm16_samples"),
-    (args: Seq[Expression]) => WavPcm16SamplesExpr(args.head))
-
-  private val wavRate: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_sample_rate"),
-    new ExpressionInfo(classOf[WavSampleRateExpr].getName, "wav_sample_rate"),
-    (args: Seq[Expression]) => WavSampleRateExpr(args.head))
-
-  private val wavImaEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_ima_encode"),
-    new ExpressionInfo(classOf[WavImaEncodeExpr].getName, "wav_ima_encode"),
-    (args: Seq[Expression]) => WavImaEncodeExpr(args(0), args(1)))
-
-  private val wavImaSamples: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_ima_samples"),
-    new ExpressionInfo(classOf[WavImaSamplesExpr].getName, "wav_ima_samples"),
-    (args: Seq[Expression]) => WavImaSamplesExpr(args.head))
-
-  private val bmpEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_rgb24_encode"),
-    new ExpressionInfo(classOf[BmpRgb24EncodeExpr].getName, "bmp_rgb24_encode"),
-    (args: Seq[Expression]) => BmpRgb24EncodeExpr(args(0), args(1)))
-
-  private val bmpPixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_rgb24_pixels"),
-    new ExpressionInfo(classOf[BmpRgb24PixelsExpr].getName, "bmp_rgb24_pixels"),
-    (args: Seq[Expression]) => BmpRgb24PixelsExpr(args.head))
-
-  private val bmpWidth: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_width"),
-    new ExpressionInfo(classOf[BmpWidthExpr].getName, "bmp_width"),
-    (args: Seq[Expression]) => BmpWidthExpr(args.head))
-
-  private val bmpHeight: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("bmp_height"),
-    new ExpressionInfo(classOf[BmpHeightExpr].getName, "bmp_height"),
-    (args: Seq[Expression]) => BmpHeightExpr(args.head))
-
-  private val bpeMergeWord: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("bpe_merge_word"),
-    new ExpressionInfo(classOf[BpeMergeWordExpr].getName, "bpe_merge_word"),
-    (args: Seq[Expression]) => BpeMergeWordExpr(args(0), args(1), args(2)))
-
-  private val aviEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("avi_dib_encode"),
-    new ExpressionInfo(classOf[AviDibEncodeExpr].getName, "avi_dib_encode"),
-    (args: Seq[Expression]) => AviDibEncodeExpr(args(0), args(1)))
-
-  private val aviFrames: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("avi_dib_frames"),
-    new ExpressionInfo(classOf[AviDibFramesExpr].getName, "avi_dib_frames"),
-    (args: Seq[Expression]) => AviDibFramesExpr(args.head))
-
-  private val aviRleEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("avi_rle8_encode"),
-    new ExpressionInfo(classOf[AviRle8EncodeExpr].getName, "avi_rle8_encode"),
-    (args: Seq[Expression]) => AviRle8EncodeExpr(args.head))
-
-  private val aviRlePixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("avi_rle8_pixels"),
-    new ExpressionInfo(classOf[AviRle8PixelsExpr].getName, "avi_rle8_pixels"),
-    (args: Seq[Expression]) => AviRle8PixelsExpr(args.head))
-
-  private val kmvSketch: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("kmv_sketch"),
-    new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-    (args: Seq[Expression]) => args match {
-      case Seq(h, k) => KmvSketchAgg(h, constK("kmv_sketch", k))
-      case _ => throw new IllegalArgumentException("kmv_sketch(hash, k)")
-    })
-
-  private val seedWindows: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("seed_windows"),
-    new ExpressionInfo(classOf[SeedWindowsExpr].getName, "seed_windows"),
-    (args: Seq[Expression]) => args match {
-      case Seq(text, k) => SeedWindowsExpr(text, constK("seed_windows", k))
-      case _ => throw new IllegalArgumentException("seed_windows(text, k)")
-    })
-
-  private val fixMojibake: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("fix_mojibake"),
-    new ExpressionInfo(classOf[MojibakeRepairExpr].getName, "fix_mojibake"),
-    (args: Seq[Expression]) => args match {
-      case Seq(text) => MojibakeRepairExpr(text)
-      case _ => throw new IllegalArgumentException("fix_mojibake(text)")
-    })
-
-  private val nfcNormalize: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(classOf[NfcNormalizeExpr].getName, "nfc_normalize"),
-    (args: Seq[Expression]) => args match {
-      case Seq(text) => NfcNormalizeExpr(text)
-      case _ => throw new IllegalArgumentException("nfc_normalize(text)")
-    })
-
-  private val phraseMatches: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("phrase_matches"),
-    new ExpressionInfo(classOf[PhraseMatchExpr].getName, "phrase_matches"),
-    (args: Seq[Expression]) => args match {
-      case Seq(text, specExpr) =>
-        val spec = (if (specExpr.foldable) specExpr.eval() else null) match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case _ => throw new IllegalArgumentException(
-            "phrase_matches requires a constant '|'-joined phrase list")
-        }
-        PhraseMatchExpr(text, spec.split('|').toSeq)
+  /** A constant '|'-joined list argument, split. */
+  private def constList(fn: String, what: String, e: Expression): Seq[String] =
+    (if (e.foldable) e.eval() else null) match {
+      case s: UTF8String => s.toString.split('|').toSeq
       case _ => throw new IllegalArgumentException(
-        "phrase_matches(text, 'phrase|phrase|...')")
-    })
+        s"$fn requires a constant '|'-joined $what list")
+    }
 
-  private val phraseRedact: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("phrase_redact"),
-    new ExpressionInfo(classOf[PhraseRedactExpr].getName, "phrase_redact"),
-    (args: Seq[Expression]) => {
-      def constStr(e: Expression, what: String): String =
-        (if (e.foldable) e.eval() else null) match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case _ => throw new IllegalArgumentException(
-            s"phrase_redact requires a constant '|'-joined $what list")
+  /** Every graft SQL function: the static calls, then the ones with
+    * their own expression class (aggregates, and those that fold
+    * constant arguments into their node). */
+  val functions: Seq[Fn] = calls.map(s =>
+    Fn(s.name, classOf[StaticCall], Seq(s.inputs.length), StaticCall(s, _))) ++ Seq(
+    Fn("minhash_bands", classOf[MinHashBandsExpr], Seq(1, 4), {
+      case Seq(text) => MinHashBandsExpr(text, 3, 12, 4)
+      case Seq(text, k, nh, nb) =>
+        def intArg(e: Expression, default: Int): Int = e match {
+          case Literal(v: Int, _) => v
+          case _ => default
         }
-      args match {
-        case Seq(text, specExpr, tagExpr) =>
-          PhraseRedactExpr(text,
-            constStr(specExpr, "phrase").split('|').toSeq,
-            constStr(tagExpr, "tag").split('|').toSeq)
-        case _ => throw new IllegalArgumentException(
-          "phrase_redact(text, 'phrase|...', 'tag|...')")
-      }
-    })
-
-  private val wavMulawEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_mulaw_encode"),
-    new ExpressionInfo(classOf[WavMulawEncodeExpr].getName, "wav_mulaw_encode"),
-    (args: Seq[Expression]) => WavMulawEncodeExpr(args(0), args(1)))
-
-  private val wavMulawSamples: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_mulaw_samples"),
-    new ExpressionInfo(classOf[WavMulawSamplesExpr].getName, "wav_mulaw_samples"),
-    (args: Seq[Expression]) => WavMulawSamplesExpr(args.head))
-
-  private val wavAlawEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_alaw_encode"),
-    new ExpressionInfo(classOf[WavAlawEncodeExpr].getName, "wav_alaw_encode"),
-    (args: Seq[Expression]) => WavAlawEncodeExpr(args(0), args(1)))
-
-  private val wavAlawSamples: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("wav_alaw_samples"),
-    new ExpressionInfo(classOf[WavAlawSamplesExpr].getName, "wav_alaw_samples"),
-    (args: Seq[Expression]) => WavAlawSamplesExpr(args.head))
-
-  private val topkPairs: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("topk_pairs"),
-    new ExpressionInfo(classOf[TopKPairsAgg].getName, "topk_pairs"),
-    (args: Seq[Expression]) => args match {
-      case Seq(a, b, k) => TopKPairsAgg(a, b, constK("topk_pairs", k))
-      case _ => throw new IllegalArgumentException("topk_pairs(a, b, k)")
-    })
-
-  private val mgSketch: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("mg_sketch"),
-    new ExpressionInfo(classOf[MgSketchAgg].getName, "mg_sketch"),
-    (args: Seq[Expression]) => args match {
-      case Seq(item, k) => MgSketchAgg(item, constK("mg_sketch", k))
-      case _ => throw new IllegalArgumentException("mg_sketch(item, k)")
-    })
-
-  private val anchorWindows: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("anchor_windows"),
-    new ExpressionInfo(classOf[AnchorWindowsExpr].getName, "anchor_windows"),
-    (args: Seq[Expression]) => args match {
+        MinHashBandsExpr(text, intArg(k, 3), intArg(nh, 12), intArg(nb, 4))
+    }),
+    Fn("shingle_hashes", classOf[ShingleHashesExpr], Seq(1, 2), {
+      case Seq(text) => ShingleHashesExpr(text, 3)
+      case Seq(text, k) => ShingleHashesExpr(text, constK("shingle_hashes", k))
+    }),
+    Fn("shingle_strings", classOf[ShingleStringsExpr], Seq(1, 2), {
+      case Seq(text) => ShingleStringsExpr(text, 3)
+      case Seq(text, k) => ShingleStringsExpr(text, constK("shingle_strings", k))
+    }),
+    Fn("anchor_windows", classOf[AnchorWindowsExpr], Seq(1, 4), {
       case Seq(text) => AnchorWindowsExpr(text, 4, 32, 8)
       case Seq(text, k, w, m) => AnchorWindowsExpr(text,
         constK("anchor_windows", k), constK("anchor_windows", w),
         constK("anchor_windows", m))
-      case _ => throw new IllegalArgumentException(
-        "anchor_windows(text[, k, w, mod])")
-    })
+    }),
+    Fn("seed_windows", classOf[SeedWindowsExpr], Seq(2), {
+      case Seq(text, k) => SeedWindowsExpr(text, constK("seed_windows", k))
+    }),
+    Fn("phrase_matches", classOf[PhraseMatchExpr], Seq(2), {
+      case Seq(text, spec) =>
+        PhraseMatchExpr(text, constList("phrase_matches", "phrase", spec))
+    }),
+    Fn("phrase_redact", classOf[PhraseRedactExpr], Seq(3), {
+      case Seq(text, spec, tags) => PhraseRedactExpr(text,
+        constList("phrase_redact", "phrase", spec),
+        constList("phrase_redact", "tag", tags))
+    }),
+    // the result's element nullability follows the input's
+    Fn("bpe_merge_word", classOf[BpeMergeWordExpr], Seq(3), {
+      case Seq(t, a, b) => BpeMergeWordExpr(t, a, b)
+    }),
+    Fn("kmv_sketch", classOf[KmvSketchAgg], Seq(2), {
+      case Seq(h, k) => KmvSketchAgg(h, constK("kmv_sketch", k))
+    }),
+    Fn("topk_pairs", classOf[TopKPairsAgg], Seq(3), {
+      case Seq(a, b, k) => TopKPairsAgg(a, b, constK("topk_pairs", k))
+    }),
+    Fn("mg_sketch", classOf[MgSketchAgg], Seq(2), {
+      case Seq(item, k) => MgSketchAgg(item, constK("mg_sketch", k))
+    }))
 
-  private val pngEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_gray8_encode"),
-    new ExpressionInfo(classOf[PngGray8EncodeExpr].getName, "png_gray8_encode"),
-    (args: Seq[Expression]) => PngGray8EncodeExpr(args(0), args(1)))
-
-  private val pngPixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_gray8_pixels"),
-    new ExpressionInfo(classOf[PngGray8PixelsExpr].getName, "png_gray8_pixels"),
-    (args: Seq[Expression]) => PngGray8PixelsExpr(args.head))
-
-  private val pngFilterTypes: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_filter_types"),
-    new ExpressionInfo(classOf[PngFilterTypesExpr].getName, "png_filter_types"),
-    (args: Seq[Expression]) => PngFilterTypesExpr(args.head))
-
-  private val pngRgbEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_rgb24_encode"),
-    new ExpressionInfo(classOf[PngRgb24EncodeExpr].getName, "png_rgb24_encode"),
-    (args: Seq[Expression]) => PngRgb24EncodeExpr(args(0), args(1)))
-
-  private val pngRgbPixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_rgb24_pixels"),
-    new ExpressionInfo(classOf[PngRgb24PixelsExpr].getName, "png_rgb24_pixels"),
-    (args: Seq[Expression]) => PngRgb24PixelsExpr(args.head))
-
-  private val pngPaletteEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_palette_encode"),
-    new ExpressionInfo(classOf[PngPaletteEncodeExpr].getName,
-      "png_palette_encode"),
-    (args: Seq[Expression]) => PngPaletteEncodeExpr(args(0), args(1)))
-
-  private val pngPaletteRgb: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_palette_rgb"),
-    new ExpressionInfo(classOf[PngPaletteRgbExpr].getName, "png_palette_rgb"),
-    (args: Seq[Expression]) => PngPaletteRgbExpr(args.head))
-
-  private val pngWidth: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_width"),
-    new ExpressionInfo(classOf[PngWidthExpr].getName, "png_width"),
-    (args: Seq[Expression]) => PngWidthExpr(args.head))
-
-  private val pngHeight: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_height"),
-    new ExpressionInfo(classOf[PngHeightExpr].getName, "png_height"),
-    (args: Seq[Expression]) => PngHeightExpr(args.head))
-
-  private val pngAdam7Encode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_adam7_encode"),
-    new ExpressionInfo(classOf[PngAdam7EncodeExpr].getName,
-      "png_adam7_encode"),
-    (args: Seq[Expression]) => PngAdam7EncodeExpr(args(0), args(1)))
-
-  private val pngAdam7Pixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_adam7_pixels"),
-    new ExpressionInfo(classOf[PngAdam7PixelsExpr].getName,
-      "png_adam7_pixels"),
-    (args: Seq[Expression]) => PngAdam7PixelsExpr(args.head))
-
-  private val pngAdam7FilterTypes: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("png_adam7_filter_types"),
-    new ExpressionInfo(classOf[PngAdam7FilterTypesExpr].getName,
-      "png_adam7_filter_types"),
-    (args: Seq[Expression]) => PngAdam7FilterTypesExpr(args.head))
-
-  private val jpegEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_gray8_encode"),
-    new ExpressionInfo(classOf[JpegGray8EncodeExpr].getName,
-      "jpeg_gray8_encode"),
-    (args: Seq[Expression]) => JpegGray8EncodeExpr(args(0), args(1)))
-
-  private val jpegEncodeRst: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_gray8_encode_rst"),
-    new ExpressionInfo(classOf[JpegGray8EncodeRstExpr].getName,
-      "jpeg_gray8_encode_rst"),
-    (args: Seq[Expression]) =>
-      JpegGray8EncodeRstExpr(args(0), args(1), args(2)))
-
-  private val jpegPixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_gray8_pixels"),
-    new ExpressionInfo(classOf[JpegGray8PixelsExpr].getName,
-      "jpeg_gray8_pixels"),
-    (args: Seq[Expression]) => JpegGray8PixelsExpr(args.head))
-
-  private val jpegDcCategories: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_dc_categories"),
-    new ExpressionInfo(classOf[JpegDcCategoriesExpr].getName,
-      "jpeg_dc_categories"),
-    (args: Seq[Expression]) => JpegDcCategoriesExpr(args.head))
-
-  private val jpegYcbcrEncode: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_ycbcr420_encode"),
-    new ExpressionInfo(classOf[JpegYcbcr420EncodeExpr].getName,
-      "jpeg_ycbcr420_encode"),
-    (args: Seq[Expression]) =>
-      JpegYcbcr420EncodeExpr(args(0), args(1), args(2), args(3)))
-
-  private val jpegRgbPixels: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_rgb_pixels"),
-    new ExpressionInfo(classOf[JpegRgbPixelsExpr].getName,
-      "jpeg_rgb_pixels"),
-    (args: Seq[Expression]) => JpegRgbPixelsExpr(args.head))
-
-  private val jpegWidth: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_width"),
-    new ExpressionInfo(classOf[JpegWidthExpr].getName, "jpeg_width"),
-    (args: Seq[Expression]) => JpegWidthExpr(args.head))
-
-  private val jpegHeight: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_height"),
-    new ExpressionInfo(classOf[JpegHeightExpr].getName, "jpeg_height"),
-    (args: Seq[Expression]) => JpegHeightExpr(args.head))
-
-  private val jpegRstCount: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("jpeg_rst_count"),
-    new ExpressionInfo(classOf[JpegRstCountExpr].getName, "jpeg_rst_count"),
-    (args: Seq[Expression]) => JpegRstCountExpr(args.head))
-
-  /** Idempotent per-session registration for sessions not created with
-    * the extensions config (e.g. the driver harness's own session). */
+  /** Idempotent per-session registration for sessions created without
+    * the extensions config. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    for (fn <- Seq(minhashBands, simhash64, vecDot, shingleHashes,
-        shingleStrings, jaccardSorted, wavEncode, wavSamples, wavRate,
-        wavImaEncode, wavImaSamples,
-        bmpEncode, bmpPixels, bmpWidth, bmpHeight, bpeMergeWord,
-        aviEncode, aviFrames, aviRleEncode, aviRlePixels, kmvSketch,
-        topkPairs, mgSketch,
-        anchorWindows, seedWindows, fixMojibake, nfcNormalize,
-        phraseMatches, phraseRedact, wavMulawEncode, wavMulawSamples,
-        wavAlawEncode, wavAlawSamples,
-        pngEncode, pngPixels,
-        pngRgbEncode, pngRgbPixels, pngPaletteEncode, pngPaletteRgb,
-        pngFilterTypes, pngWidth, pngHeight, pngAdam7Encode,
-        pngAdam7Pixels, pngAdam7FilterTypes, jpegEncode, jpegEncodeRst, jpegPixels,
-        jpegDcCategories, jpegWidth, jpegHeight, jpegRstCount,
-        jpegYcbcrEncode, jpegRgbPixels))
-      if (!registry.functionExists(fn._1))
-        registry.registerFunction(fn._1, fn._2, fn._3)
-    // live sessions (harness-created, no spark.sql.extensions conf)
-    // get the codec-guard rule via experimental.extraOptimizations —
-    // idempotent, applied at the end of every optimization run
+    for (f <- functions) {
+      val (id, info, builder) = f.entry
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+    // the codec-guard rule, through experimental.extraOptimizations
+    // (applied at the end of every optimization run)
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.RewriteCodecLengthGuards))
       spark.experimental.extraOptimizations =

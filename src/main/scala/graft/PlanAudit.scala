@@ -216,6 +216,35 @@ object PlanAudit {
     "q9e_cms_incremental" ->
       ((s, d) => graft.queries.Relational.cmsMergedCounters(s, d)))
 
+  /** One query's section of PLANS.md: its formatted physical plan and,
+    * when that plan is a bare `Scan ExistingRDD`, the plans its
+    * construction materialized. Returns (section, blind): blind when
+    * the plan is a bare scan and construction captured no real plan. */
+  def section(spark: SparkSession, name: String,
+      build: () => org.apache.spark.sql.DataFrame): (String, Boolean) = {
+    val (df, captured) = buildCapturing(spark, build)
+    val plan = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val sb = new StringBuilder(s"\n## $name\n\n```\n$plan```\n")
+    if (!isBareRddScan(plan)) return (sb.toString, false)
+    // the final frame is a checkpointed RDD: the real work ran at
+    // construction time — show it (most-downstream plans last; cap at
+    // the last 4, which for iterative builders are the rounds that
+    // matter, and say what was elided)
+    val real = captured.filterNot(isBareRddScan)
+    if (real.isEmpty)
+      sb.append("\n*AUDIT BLIND: checkpoint-terminated with no " +
+        "captured pre-checkpoint plan.*\n")
+    if (real.size > 4)
+      sb.append(s"\n*${real.size - 4} earlier construction plans " +
+        "elided (iterative build).*\n")
+    real.takeRight(4).foreach { p =>
+      sb.append(s"\n### $name — materialized during construction\n\n")
+      sb.append(s"```\n$p```\n")
+    }
+    (sb.toString, real.isEmpty)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
@@ -231,33 +260,11 @@ object PlanAudit {
     sb.append("a bare `Scan ExistingRDD` with no such subsection would\n")
     sb.append("mean the audit saw no work at all (gated by\n")
     sb.append("PlanShapeSpec).\n")
-    var blind = 0
-    Headline.foreach { name =>
-      val (df, captured) = buildCapturing(spark,
+    val blind = Headline.count { name =>
+      val (text, isBlind) = section(spark, name,
         () => overrides.getOrElse(name, SparkEntry.queries(name))(spark, sfDir))
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
-      if (isBareRddScan(plan)) {
-        // the final frame is a checkpointed RDD: the real work ran at
-        // construction time — show it (most-downstream plans last; cap
-        // at the last 4, which for iterative builders are the rounds
-        // that matter, and say what was elided)
-        val real = captured.filterNot(isBareRddScan)
-        if (real.isEmpty) {
-          blind += 1
-          sb.append("\n*AUDIT BLIND: checkpoint-terminated with no " +
-            "captured pre-checkpoint plan.*\n")
-        } else {
-          if (real.size > 4)
-            sb.append(s"\n*${real.size - 4} earlier construction plans " +
-              "elided (iterative build).*\n")
-          real.takeRight(4).foreach { p =>
-            sb.append(s"\n### $name — materialized during construction\n\n")
-            sb.append(s"```\n$p```\n")
-          }
-        }
-      }
+      sb.append(text)
+      isBlind
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out (${Headline.size} plans, $blind blind)")

@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths}
 
 /** Per-query formatted-plan dumper for the optimization rounds: writes
   * `<outDir>/<query>_<tag>.txt` with the `explain("formatted")` of each
-  * named query (plus any plans materialized during construction — the
-  * PlanAudit capture, so checkpoint-terminated queries show their real
-  * work). Unlike PlanAudit (fixed headline list, local[4]), this runs at
-  * the bench's own parallelism (`SPARK_GRAFT_CPUS`, default 4) so the
-  * captured shape is the one the bench times:
+  * named query as its PLANS.md section ([[PlanAudit.section]]: plus the
+  * plans materialized during construction, so checkpoint-terminated
+  * queries show their real work). Unlike PlanAudit (fixed headline
+  * list, local[4]), this runs at the bench's own parallelism
+  * (`SPARK_GRAFT_CPUS`, default 4) so the captured shape is the one
+  * the bench times:
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PlanDump \
   *     /root/testdata/sf0.1 plans/r20 before q5b_ann_recall qb8_kmv_overlap"
@@ -24,22 +25,10 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val (df, captured) = PlanAudit.buildCapturing(spark,
-        () => fn(spark, sfDir))
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val sb = new StringBuilder
-      sb.append(s"# $name @ $sfDir (local[$cpus], shuffle=$cpus) — $tag\n\n")
-      sb.append(plan)
-      val real = captured.filterNot(PlanAudit.isBareRddScan)
-      if (PlanAudit.isBareRddScan(plan) && real.nonEmpty) {
-        real.takeRight(4).foreach { p =>
-          sb.append(s"\n\n## materialized during construction\n\n")
-          sb.append(p)
-        }
-      }
-      Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), sb.toString)
+      val (section, _) = PlanAudit.section(spark, name,
+        () => SparkEntry.queries(name)(spark, sfDir))
+      Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"),
+        s"# $name @ $sfDir (local[$cpus], shuffle=$cpus) — $tag\n$section")
       println(s"wrote $outDir/${name}_$tag.txt")
     }
     spark.stop()

@@ -2,11 +2,7 @@ package graft.expressions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL AVI (RIFF 'AVI ') container codec with uncompressed DIB video
   * frames — the video-modality counterpart of [[WavPcm16]] and
@@ -111,7 +107,6 @@ object AviDib {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"avi_dib: $msg")
 
-
   /** Extract the DIB frame payloads by walking the container; validates
     * RIFF/'AVI ' magics and the avih frame count. */
   def frames(avi: Array[Byte]): ArrayData = {
@@ -175,39 +170,4 @@ object AviDib {
       fail(s"avih declares $declared frames, movi carries ${out.size}")
     new GenericArrayData(out.toArray)
   }
-}
-
-case class AviDibEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"avi_dib_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "avi_dib_encode"
-  override protected def nullSafeEval(p: Any, fb: Any): Any =
-    AviDib.encode(p.asInstanceOf[Array[Byte]], fb.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, fb) =>
-      s"graft.expressions.AviDib.encode($p, $fb)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class AviDibFramesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"avi_dib_frames requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def prettyName: String = "avi_dib_frames"
-  override protected def nullSafeEval(avi: Any): Any =
-    AviDib.frames(avi.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, avi =>
-      s"graft.expressions.AviDib.frames($avi)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -2,11 +2,7 @@ package graft.expressions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL RLE8-COMPRESSED AVI video codec — the compressed member of the
   * video family, completing the per-modality compression symmetry
@@ -327,34 +323,4 @@ object AviRle8 {
     }
     new GenericArrayData(out)
   }
-}
-
-case class AviRle8EncodeExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"avi_rle8_encode requires binary input, got ${child.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "avi_rle8_encode"
-  override protected def nullSafeEval(p: Any): Any =
-    AviRle8.encode(p.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, p => s"graft.expressions.AviRle8.encode($p)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class AviRle8PixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"avi_rle8_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "avi_rle8_pixels"
-  override protected def nullSafeEval(avi: Any): Any =
-    AviRle8.pixels(avi.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, avi => s"graft.expressions.AviRle8.pixels($avi)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

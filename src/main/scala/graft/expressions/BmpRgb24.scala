@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL BMP (BITMAPINFOHEADER, 24-bit RGB) codec — the image-modality
   * counterpart of [[WavPcm16]]: a true pure-JVM decoder for the second
@@ -130,69 +126,4 @@ object BmpRgb24 {
 
   def width(bmp: Array[Byte]): Int = header(bmp)._2
   def height(bmp: Array[Byte]): Int = header(bmp)._3
-}
-
-case class BmpRgb24EncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bmp_rgb24_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bmp_rgb24_encode"
-  override protected def nullSafeEval(p: Any, w: Any): Any =
-    BmpRgb24.encode(p.asInstanceOf[Array[Byte]], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w) =>
-      s"graft.expressions.BmpRgb24.encode($p, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class BmpRgb24PixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bmp_rgb24_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "bmp_rgb24_pixels"
-  override protected def nullSafeEval(bmp: Any): Any =
-    BmpRgb24.pixels(bmp.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, bmp =>
-      s"graft.expressions.BmpRgb24.pixels($bmp)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class BmpWidthExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bmp_width requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "bmp_width"
-  override protected def nullSafeEval(bmp: Any): Any =
-    BmpRgb24.width(bmp.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, bmp => s"graft.expressions.BmpRgb24.width($bmp)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class BmpHeightExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bmp_height requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "bmp_height"
-  override protected def nullSafeEval(bmp: Any): Any =
-    BmpRgb24.height(bmp.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, bmp => s"graft.expressions.BmpRgb24.height($bmp)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

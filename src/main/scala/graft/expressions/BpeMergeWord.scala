@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * create a new occurrence of the SAME pair to its left; the DuckDB
   * oracle replays the leftmost-repeat form and must agree.)
   *
-  * Codegen scalar (VectorDot pattern): the q97 training loop applies it
+  * Codegen scalar: the q97 training loop applies it
   * as a narrow projection over the word vocab, never shuffling the
   * corpus. */
 object BpeMergeWord {

@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL baseline JPEG (ITU-T T.81, SOF0, huffman, grayscale) codec —
   * the dominant real-world image format and the first ENTROPY-CODED +
@@ -887,167 +883,4 @@ object JpegGray8 {
     }
     n
   }
-}
-
-case class JpegGray8EncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_gray8_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "jpeg_gray8_encode"
-  override protected def nullSafeEval(p: Any, w: Any): Any =
-    JpegGray8.encode(p.asInstanceOf[Array[Byte]], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w) =>
-      s"graft.expressions.JpegGray8.encode($p, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `jpeg_gray8_encode_rst(payload, widthBlocks, restartInterval)` —
-  * the restart-marker form of the gray encode (DRI + cycling RSTn +
-  * per-interval DC predictor reset); interval 0 degenerates to the
-  * classic single-segment scan. */
-case class JpegGray8EncodeRstExpr(first: Expression, second: Expression,
-    third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType == BinaryType && second.dataType == IntegerType &&
-        third.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_gray8_encode_rst requires (binary, int, int), got " +
-        children.map(_.dataType).mkString(" / "))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "jpeg_gray8_encode_rst"
-  override protected def nullSafeEval(p: Any, w: Any, r: Any): Any =
-    JpegGray8.encodeRestart(p.asInstanceOf[Array[Byte]],
-      w.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w, r) =>
-      s"graft.expressions.JpegGray8.encodeRestart($p, $w, $r)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(first = f, second = s, third = t)
-}
-
-case class JpegYcbcr420EncodeExpr(first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType == BinaryType && second.dataType == IntegerType &&
-        third.dataType == IntegerType && fourth.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_ycbcr420_encode requires (binary, int, int, int), got " +
-        children.map(_.dataType).mkString(" / "))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "jpeg_ycbcr420_encode"
-  override protected def nullSafeEval(p: Any, w: Any, cb: Any,
-      cr: Any): Any =
-    JpegGray8.encodeYcbcr420(p.asInstanceOf[Array[Byte]],
-      w.asInstanceOf[Int], cb.asInstanceOf[Int], cr.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w, cb, cr) =>
-      s"graft.expressions.JpegGray8.encodeYcbcr420($p, $w, $cb, $cr)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression, q: Expression): Expression =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
-case class JpegRgbPixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_rgb_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "jpeg_rgb_pixels"
-  override protected def nullSafeEval(jpeg: Any): Any =
-    JpegGray8.pixelsRgb(jpeg.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, jpeg =>
-      s"graft.expressions.JpegGray8.pixelsRgb($jpeg)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class JpegGray8PixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_gray8_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "jpeg_gray8_pixels"
-  override protected def nullSafeEval(jpeg: Any): Any =
-    JpegGray8.pixels(jpeg.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, jpeg =>
-      s"graft.expressions.JpegGray8.pixels($jpeg)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class JpegDcCategoriesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_dc_categories requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "jpeg_dc_categories"
-  override protected def nullSafeEval(jpeg: Any): Any =
-    JpegGray8.dcCategories(jpeg.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, jpeg =>
-      s"graft.expressions.JpegGray8.dcCategories($jpeg)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class JpegWidthExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_width requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "jpeg_width"
-  override protected def nullSafeEval(jpeg: Any): Any =
-    JpegGray8.width(jpeg.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, jpeg => s"graft.expressions.JpegGray8.width($jpeg)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class JpegRstCountExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_rst_count requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "jpeg_rst_count"
-  override protected def nullSafeEval(jpeg: Any): Any =
-    JpegGray8.rstCount(jpeg.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, jpeg =>
-      s"graft.expressions.JpegGray8.rstCount($jpeg)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class JpegHeightExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_height requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "jpeg_height"
-  override protected def nullSafeEval(jpeg: Any): Any =
-    JpegGray8.height(jpeg.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, jpeg => s"graft.expressions.JpegGray8.height($jpeg)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

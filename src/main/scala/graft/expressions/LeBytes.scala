@@ -1,5 +1,7 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+
 /** Little-endian byte helpers shared by the container codecs
   * ([[WavPcm16]], [[BmpRgb24]]) — one definition so a bounds or
   * signedness fix cannot silently apply to only one format. */
@@ -84,5 +86,29 @@ private[expressions] object LeBytes {
     out.write(payload, 0, payload.length)
     if (pad == 1) out.write(0)
     out.toByteArray
+  }
+
+  /** Mono 8-bit G.711 decode shared by WavAlaw/WavMulaw: the fmt
+    * contract check (format `formatTag`, mono, 8-bit), then one
+    * `expand`ed 16-bit value per data byte. `law` names the format in
+    * the rejection; `fail` carries the calling codec's error prefix. */
+  def g711Samples(wav: Array[Byte], formatTag: Int, law: String,
+      fail: String => Nothing, expand: Int => Int): ArrayData = {
+    val (fmtOff, fmtSize) = findWavChunk(wav, "fmt ", fail)
+    if (fmtSize < 16) fail(s"fmt chunk too short ($fmtSize bytes)")
+    val fmt = readU16(wav, fmtOff)
+    if (fmt != formatTag) fail(s"not $law (audio format $fmt)")
+    val channels = readU16(wav, fmtOff + 2)
+    if (channels != 1) fail(s"expected mono, got $channels channels")
+    val bits = readU16(wav, fmtOff + 14)
+    if (bits != 8) fail(s"expected 8-bit codes, got $bits")
+    val (off, size) = findWavChunk(wav, "data", fail)
+    val out = new Array[Int](size)
+    var i = 0
+    while (i < size) {
+      out(i) = expand(wav(off + i) & 0xff)
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 }

@@ -3,10 +3,7 @@ package graft.expressions
 import java.nio.ByteBuffer
 import java.nio.charset.{CharacterCodingException, CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mojibake detection-and-repair (the ftfy `fix_encoding` core, the
@@ -140,27 +137,4 @@ object MojibakeRepair {
     }
     row
   }
-}
-
-case class MojibakeRepairExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"fix_mojibake requires a string input, got ${child.dataType}")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("fixed", StringType, nullable = false),
-    StructField("iters", IntegerType, nullable = false)))
-
-  override def prettyName: String = "fix_mojibake"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MojibakeRepair.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.MojibakeRepair.eval($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

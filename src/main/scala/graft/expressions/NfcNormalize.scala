@@ -2,10 +2,6 @@ package graft.expressions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization (UAX #15 canonical composition) — the
@@ -39,25 +35,4 @@ object NfcNormalize {
       else UTF8String.fromString(Normalizer.normalize(s, Normalizer.Form.NFC))
     }
   }
-}
-
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize requires a string input, got ${child.dataType}")
-
-  override def dataType: DataType = StringType
-
-  override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NfcNormalize.eval(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.NfcNormalize.eval($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL PNG (8-bit, non-interlaced; grayscale AND truecolor RGB24)
   * codec — the first COMPRESSED format in the multimodal family: unlike
@@ -587,206 +583,4 @@ object PngGray8 {
     }
     new GenericArrayData(fs.result())
   }
-}
-
-case class PngGray8EncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_gray8_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "png_gray8_encode"
-  override protected def nullSafeEval(p: Any, w: Any): Any =
-    PngGray8.encode(p.asInstanceOf[Array[Byte]], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w) =>
-      s"graft.expressions.PngGray8.encode($p, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class PngGray8PixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_gray8_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "png_gray8_pixels"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.pixels(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png =>
-      s"graft.expressions.PngGray8.pixels($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngFilterTypesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_filter_types requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "png_filter_types"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.filterTypes(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png =>
-      s"graft.expressions.PngGray8.filterTypes($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngRgb24EncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_rgb24_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "png_rgb24_encode"
-  override protected def nullSafeEval(p: Any, w: Any): Any =
-    PngGray8.encodeRgb24(p.asInstanceOf[Array[Byte]], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w) =>
-      s"graft.expressions.PngGray8.encodeRgb24($p, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class PngRgb24PixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_rgb24_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "png_rgb24_pixels"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.pixelsRgb24(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png =>
-      s"graft.expressions.PngGray8.pixelsRgb24($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngPaletteEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_palette_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "png_palette_encode"
-  override protected def nullSafeEval(p: Any, w: Any): Any =
-    PngGray8.encodePalette(p.asInstanceOf[Array[Byte]], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w) =>
-      s"graft.expressions.PngGray8.encodePalette($p, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class PngPaletteRgbExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_palette_rgb requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "png_palette_rgb"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.pixelsPaletteRgb(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png =>
-      s"graft.expressions.PngGray8.pixelsPaletteRgb($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngWidthExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_width requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "png_width"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.width(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png => s"graft.expressions.PngGray8.width($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngHeightExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_height requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "png_height"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.height(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png => s"graft.expressions.PngGray8.height($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngAdam7EncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_adam7_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "png_adam7_encode"
-  override protected def nullSafeEval(p: Any, w: Any): Any =
-    PngGray8.encodeAdam7(p.asInstanceOf[Array[Byte]], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, w) =>
-      s"graft.expressions.PngGray8.encodeAdam7($p, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class PngAdam7PixelsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_adam7_pixels requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "png_adam7_pixels"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.pixelsAdam7(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png =>
-      s"graft.expressions.PngGray8.pixelsAdam7($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PngAdam7FilterTypesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_adam7_filter_types requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "png_adam7_filter_types"
-  override protected def nullSafeEval(png: Any): Any =
-    PngGray8.filterTypesAdam7(png.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, png =>
-      s"graft.expressions.PngGray8.filterTypesAdam7($png)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,10 +1,10 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -145,34 +145,4 @@ case class ShingleStringsExpr(child: Expression, k: Int) extends UnaryExpression
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-case class JaccardSortedExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  // containsNull arrays are rejected outright: the merge reads primitive
-  // longs, so a null slot would silently read as 0 instead of erroring.
-  // Sortedness/distinctness cannot be checked statically — they are the
-  // documented input contract (shingle_hashes and array_sort∘array_distinct
-  // both produce it); unsorted input yields an undercounted intersection.
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(e => e.dataType match {
-      case ArrayType(LongType, false) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaccard_sorted requires two array<bigint> inputs without null " +
-        s"elements, got ${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_sorted"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ShingleJaccard.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.ShingleJaccard.jaccardSorted($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

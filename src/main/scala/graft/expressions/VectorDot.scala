@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Dot product of two double vectors as a codegen scalar — the hot loop
   * of every similarity operator. The built-in form
@@ -23,30 +19,4 @@ object VectorDot {
     while (i < n) { acc += x(i) * y(i); i += 1 }
     acc
   }
-}
-
-case class VectorDotExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def ok(dt: DataType) = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_dot requires two array<double> inputs, got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vec_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.VectorDot.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

@@ -2,11 +2,7 @@ package graft.expressions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL IMA ADPCM (DVI4) WAV codec — the COMPRESSED member of the
   * audio family, closing the per-modality symmetry with the image
@@ -43,9 +39,10 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
   * against the decoded total. Malformed containers are REJECTED with
   * descriptive errors, not sliced.
   *
-  * Both surfaces are codegen scalar expressions (VectorDot pattern):
-  * narrow per-row work, no shuffle — the 100-TB plan shape is one
-  * projection per asset.
+  * Both surfaces are SQL functions that call these methods
+  * (`wav_ima_encode`, `wav_ima_samples`, rows of
+  * [[graft.GraftExtensions.calls]]): narrow per-row codegen work, no
+  * shuffle — the 100-TB plan shape is one projection per asset.
   */
 object WavImaAdpcm {
 
@@ -203,39 +200,4 @@ object WavImaAdpcm {
       fail(s"fact chunk declares $declared samples, decoded $n")
     new GenericArrayData(java.util.Arrays.copyOf(out, n))
   }
-}
-
-case class WavImaEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_ima_encode requires (binary, int), got " +
-        s"(${left.dataType}, ${right.dataType})")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "wav_ima_encode"
-  override protected def nullSafeEval(p: Any, r: Any): Any =
-    WavImaAdpcm.encode(p.asInstanceOf[Array[Byte]], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, r) =>
-      s"graft.expressions.WavImaAdpcm.encode($p, $r)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class WavImaSamplesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_ima_samples requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "wav_ima_samples"
-  override protected def nullSafeEval(wav: Any): Any =
-    WavImaAdpcm.samples(wav.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, wav =>
-      s"graft.expressions.WavImaAdpcm.samples($wav)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

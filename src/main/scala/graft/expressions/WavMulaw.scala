@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
+import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** G.711 µ-LAW companded audio (RIFF wFormatTag 7) — the logarithmic
   * 8-bit telephony codec, closing the companded-format box next to
@@ -26,17 +22,12 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
   * containers are REJECTED with a descriptive error, not sliced. */
 object WavMulaw {
 
-  import LeBytes.readU16
-
   /** Build a valid mono µ-law WAV whose data chunk is `payload`. */
   def encode(payload: Array[Byte], sampleRate: Int): Array[Byte] =
     LeBytes.g711Wav(payload, sampleRate, 7) // format 7: µ-law
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"wav_mulaw: $msg")
-
-  private def findChunk(wav: Array[Byte], id: String): (Int, Int) =
-    LeBytes.findWavChunk(wav, id, fail)
 
   /** The canonical per-code expansion (Sun g711 ulaw2linear — the
     * ±32124 16-bit reconstruction table, computed not tabulated). */
@@ -49,57 +40,6 @@ object WavMulaw {
 
   /** Decode the sample array: one expanded 16-bit value per data
     * byte, after the fmt contract check (format 7, mono, 8-bit). */
-  def samples(wav: Array[Byte]): ArrayData = {
-    val (fmtOff, fmtSize) = findChunk(wav, "fmt ")
-    if (fmtSize < 16) fail(s"fmt chunk too short ($fmtSize bytes)")
-    val fmt = readU16(wav, fmtOff)
-    if (fmt != 7) fail(s"not mu-law (audio format $fmt)")
-    val channels = readU16(wav, fmtOff + 2)
-    if (channels != 1) fail(s"expected mono, got $channels channels")
-    val bits = readU16(wav, fmtOff + 14)
-    if (bits != 8) fail(s"expected 8-bit codes, got $bits")
-    val (off, size) = findChunk(wav, "data")
-    val out = new Array[Int](size)
-    var i = 0
-    while (i < size) {
-      out(i) = expand(wav(off + i) & 0xff)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-case class WavMulawEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_mulaw_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "wav_mulaw_encode"
-  override protected def nullSafeEval(p: Any, r: Any): Any =
-    WavMulaw.encode(p.asInstanceOf[Array[Byte]], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, r) =>
-      s"graft.expressions.WavMulaw.encode($p, $r)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class WavMulawSamplesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_mulaw_samples requires a binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "wav_mulaw_samples"
-  override protected def nullSafeEval(t: Any): Any =
-    WavMulaw.samples(t.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.expressions.WavMulaw.samples($t)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def samples(wav: Array[Byte]): ArrayData =
+    LeBytes.g711Samples(wav, 7, "mu-law", fail, expand)
 }

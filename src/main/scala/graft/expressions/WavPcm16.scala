@@ -2,11 +2,7 @@ package graft.expressions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** REAL WAV (RIFF) PCM16 codec for the multimodal audio path — replaces
   * the fixed-stride stub for ONE format with a true pure-JVM decoder
@@ -27,9 +23,10 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
   * values from `hex(encode(text))` — the decode arithmetic is fully
   * replayed, not trusted.
   *
-  * All three surfaces are codegen scalar expressions (VectorDot
-  * pattern): narrow per-row work, no shuffle, a real codec swap at
-  * 100 TB keeps the same plan shape.
+  * All three surfaces are SQL functions that call these methods
+  * (`wav_pcm16_encode`, `wav_pcm16_samples`, `wav_sample_rate`, rows of
+  * [[graft.GraftExtensions.calls]]): narrow per-row codegen work, no
+  * shuffle, a real codec swap at 100 TB keeps the same plan shape.
   */
 object WavPcm16 {
 
@@ -56,7 +53,6 @@ object WavPcm16 {
     out.write(payload, 0, dataLen)
     out.toByteArray
   }
-
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"wav_pcm16: $msg")
@@ -105,55 +101,4 @@ object WavPcm16 {
     if (rate <= 0) fail(s"sample rate out of range ($rate)")
     rate
   }
-}
-
-case class WavPcm16EncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_pcm16_encode requires (binary, int), got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "wav_pcm16_encode"
-  override protected def nullSafeEval(p: Any, sr: Any): Any =
-    WavPcm16.encode(p.asInstanceOf[Array[Byte]], sr.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, sr) =>
-      s"graft.expressions.WavPcm16.encode($p, $sr)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-case class WavPcm16SamplesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_pcm16_samples requires binary input, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "wav_pcm16_samples"
-  override protected def nullSafeEval(wav: Any): Any =
-    WavPcm16.samples(wav.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, wav =>
-      s"graft.expressions.WavPcm16.samples($wav)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class WavSampleRateExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wav_sample_rate requires binary input, got ${child.dataType}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "wav_sample_rate"
-  override protected def nullSafeEval(wav: Any): Any =
-    WavPcm16.sampleRate(wav.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, wav =>
-      s"graft.expressions.WavPcm16.sampleRate($wav)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

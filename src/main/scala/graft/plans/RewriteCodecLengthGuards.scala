@@ -1,7 +1,6 @@
 package graft.plans
 
-import graft.expressions.{AviDibEncodeExpr, AviDibFramesExpr,
-  WavPcm16EncodeExpr, WavPcm16SamplesExpr}
+import graft.expressions.StaticCall
 import org.apache.spark.sql.catalyst.expressions.{Expression,
   GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual,
   Literal, OctetLength, PredicateHelper, Size}
@@ -61,16 +60,26 @@ object RewriteCodecLengthGuards extends Rule[LogicalPlan]
     case _ => None
   }
 
+  /** `name(args...)` for a [[StaticCall]] of that SQL function. */
+  private object Call {
+    def unapply(e: Expression): Option[(String, Seq[Expression])] = e match {
+      case c: StaticCall => Some(c.sig.name -> c.children)
+      case _ => None
+    }
+  }
+
   /** payload of a direct size(samples(encode(p, _))) chain. */
   private def wavPayload(e: Expression): Option[Expression] = e match {
-    case Size(WavPcm16SamplesExpr(WavPcm16EncodeExpr(p, _)), _) => Some(p)
+    case Size(Call("wav_pcm16_samples",
+        Seq(Call("wav_pcm16_encode", Seq(p, _)))), _) => Some(p)
     case _ => None
   }
 
   /** (payload, frameBytes) of a direct size(frames(encode(p, fb))). */
   private def aviPayload(e: Expression): Option[(Expression, Long)] =
     e match {
-      case Size(AviDibFramesExpr(AviDibEncodeExpr(p, fb)), _) =>
+      case Size(Call("avi_dib_frames",
+          Seq(Call("avi_dib_encode", Seq(p, fb)))), _) =>
         intLit(fb).map(p -> _)
       case _ => None
     }
@@ -114,9 +123,11 @@ object RewriteCodecLengthGuards extends Rule[LogicalPlan]
     * null-propagating and never return null for non-null input), so
     * the whole conjunct collapses to isnotnull(p). */
   private def rewriteNotNull(e: Expression): Option[Expression] = e match {
-    case IsNotNull(WavPcm16SamplesExpr(WavPcm16EncodeExpr(p, r)))
+    case IsNotNull(Call("wav_pcm16_samples",
+        Seq(Call("wav_pcm16_encode", Seq(p, r)))))
         if r.foldable && r.eval() != null => Some(IsNotNull(p))
-    case IsNotNull(AviDibFramesExpr(AviDibEncodeExpr(p, fb)))
+    case IsNotNull(Call("avi_dib_frames",
+        Seq(Call("avi_dib_encode", Seq(p, fb)))))
         if fb.foldable && fb.eval() != null => Some(IsNotNull(p))
     case _ => None
   }

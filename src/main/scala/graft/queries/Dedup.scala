@@ -155,7 +155,7 @@ object Dedup extends Registry {
 
   /** SimHash near-dup pairs among content classes, Hamming-verified.
     * Same pre-dedup + bucket-cap guards as [[minhashPairs]]. The sketch
-    * is the custom codegen expression [[graft.expressions.SimHash64Expr]]
+    * is the codegen function `simhash64` ([[graft.expressions.SimHash64]])
     * — one pass over the words instead of 64 interpreted filter scans,
     * bit-identical output. */
   /** @param numBands LSH band count over the 64-bit sketch (band width =

@@ -42,7 +42,7 @@ object Similarity extends Registry {
 
   private def vecD(c: Column): Column = transform(c, x => x.cast("double"))
 
-  /** Codegen dot product (graft.expressions.VectorDotExpr) — the
+  /** Codegen dot product (`vec_dot`, [[graft.expressions.VectorDot]]) — the
     * built-in aggregate/zip_with form is interpreted and was the
     * dominant cost of every scorer at bench scale. */
   private def dot(a: Column, b: Column): Column =

@@ -332,11 +332,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     // length precondition BEFORE the codec; this gate keeps the next
     // decoded-output guard from reintroducing the double decode.
     import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val codecPrefixes = Seq("Wav", "Bmp", "Avi", "Png", "Jpeg")
+    val codecPrefixes = Seq("wav_", "bmp_", "avi_", "png_", "jpeg_")
     val offenders = registryOffenders(Set.empty)(_.exists {
-      case f: Filter => f.condition.exists { e =>
-        e.getClass.getName.startsWith("graft.expressions.") &&
-          codecPrefixes.exists(e.getClass.getSimpleName.startsWith)
+      case f: Filter => f.condition.exists {
+        case c: graft.expressions.StaticCall =>
+          codecPrefixes.exists(c.sig.name.startsWith)
+        case _ => false
       }
       case _ => false
     })
