@@ -1950,28 +1950,16 @@ object Dedup extends Registry {
   /** Streaming-maintenance form of q9m's filter: fold ONE micro-batch
     * of documents (doc_id, text) into the stored bloom word file — the
     * foreachBatch production shape, like Relational.hllFoldBatch/
-    * cmsFoldBatch. Bit-OR is idempotent AND commutative, so
-    * at-least-once redelivery and trigger reordering cannot corrupt
-    * membership state — exactly why a bloom is the right streaming
-    * dedup gate. State is collected to the driver before the overwrite
-    * (bounded: ≤2048 words), making the read-modify-write safe against
-    * reading the directory being replaced. StreamingSpec proves the
-    * drained fold ≡ a from-scratch build bit-for-bit. */
-  def bloomFoldBatch(s: SparkSession, stateDir: String,
+    * cmsFoldBatch, committed through [[VersionedState]]. Bit-OR is
+    * idempotent AND commutative, so at-least-once redelivery and
+    * trigger reordering cannot corrupt membership state — exactly why
+    * a bloom is the right streaming dedup gate. StreamingSpec proves
+    * the drained fold ≡ a from-scratch build bit-for-bit. */
+  def bloomFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
-    import s.implicits._
-    val wordDir = java.nio.file.Paths.get(stateDir, "words")
-    val fresh = bloomWordsOf(batch.select(md5($"text").as("h")))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prior =
-      if (java.nio.file.Files.exists(wordDir.resolve("_SUCCESS")))
-        s.read.parquet(wordDir.toString)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      else Map.empty[Long, Long]
-    val merged = (prior.keySet ++ fresh.keySet).toSeq.sorted.map { w =>
-      (w, prior.getOrElse(w, 0L) | fresh.getOrElse(w, 0L))
-    }
-    merged.toDF("w", "bits").coalesce(1)
-      .write.mode("overwrite").parquet(wordDir.toString)
+    val fresh = bloomWordsOf(batch.select(md5(col("text")).as("h")))
+    VersionedState.foldTable(s, stateDir, batchId, "words")(_.fold(fresh)(
+      _.unionAll(fresh).groupBy(col("w"))
+        .agg(bit_or(col("bits")).as("bits"))))
   }
 }

@@ -1541,31 +1541,24 @@ object Relational extends Registry {
     * rows into the stored per-priority register file (the foreachBatch
     * production shape — a stream keeps count-distinct fresh by merging
     * each trigger's sketches into state whose size is keys × 2^lgK
-    * bytes REGARDLESS of stream volume). The state is collected to the
-    * driver before the overwrite (bounded: a few KB per key), which
-    * also makes the read-modify-write safe against reading the
-    * directory being replaced. StreamingSpec proves drained-stream ≡
+    * bytes REGARDLESS of stream volume), committed through
+    * [[VersionedState]]. StreamingSpec proves drained-stream ≡
     * from-scratch rebuild. */
-  def hllFoldBatch(s: SparkSession, stateDir: String,
+  def hllFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
     import s.implicits._
-    val skDir = java.nio.file.Paths.get(stateDir, "sketches")
     val bs = batch.groupBy($"o_orderpriority")
       .agg(hll_sketch_agg($"o_custkey", lit(HllLgK)).as("sk_new"))
-    val merged =
-      if (java.nio.file.Files.exists(skDir.resolve("_SUCCESS")))
-        s.read.parquet(skDir.toString)
-          .join(bs, Seq("o_orderpriority"), "full")
+    VersionedState.foldTable(s, stateDir, batchId, "sketches") {
+      case Some(prev) =>
+        prev.join(bs, Seq("o_orderpriority"), "full")
           .select($"o_orderpriority",
             when($"sk_base".isNull, $"sk_new")
               .when($"sk_new".isNull, $"sk_base")
               .otherwise(hll_union($"sk_base", $"sk_new",
                 allowDifferentLgConfigK = false)).as("sk_base"))
-      else bs.select($"o_orderpriority", $"sk_new".as("sk_base"))
-    val rows = merged.collect() // bounded: keys × sketch bytes
-    s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-        merged.schema)
-      .write.mode("overwrite").parquet(skDir.toString)
+      case None => bs.select($"o_orderpriority", $"sk_new".as("sk_base"))
+    }
   }
 
   def hllIncremental(s: SparkSession, dir: String): DataFrame = {
@@ -1689,34 +1682,24 @@ object Relational extends Registry {
     * state size is depth×width longs REGARDLESS of stream volume, and
     * because counter addition is exactly mergeable the drained state
     * equals a from-scratch build bit-for-bit, with no q9c-style
-    * estimator caveat). The grid is collected to the driver before the
-    * write (bounded). Additive counters are NOT naturally idempotent —
-    * a redelivered batch would double-count — so the fold carries an
-    * applied-batch LEDGER, and state + ledger commit in ONE atomic
-    * rename via [[VersionedState]]: a crash can never leave merged
-    * counters marked unapplied (the window the old write-grid-then-
-    * touch-marker order had), which is what makes at-least-once
-    * redelivery exactly-once at the sink. */
+    * estimator caveat). Additive counters are NOT naturally
+    * idempotent — a redelivered batch would double-count — so the
+    * fold relies on [[VersionedState]]'s batch LEDGER, which
+    * commits with the grid in ONE atomic rename: a crash can never
+    * leave merged counters marked unapplied, which is what makes
+    * at-least-once redelivery exactly-once at the sink. */
   def cmsFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
     import s.implicits._
-    if (VersionedState.applied(stateDir, batchId)) return
     val bc = cmsCounters(batch.select($"user_id"))
       .withColumnRenamed("cnt", "cnt_new")
-    val merged = VersionedState.tablePath(stateDir, "counters") match {
+    VersionedState.foldTable(s, stateDir, batchId, "counters") {
       case Some(grid) =>
-        s.read.parquet(grid.toString)
-          .join(bc, Seq("d", "w"), "full")
+        grid.join(bc, Seq("d", "w"), "full")
           .select($"d", $"w",
             (coalesce($"cnt", lit(0L)) + coalesce($"cnt_new", lit(0L)))
               .as("cnt"))
       case None => bc.select($"d", $"w", $"cnt_new".as("cnt"))
-    }
-    val rows = merged.collect() // bounded: ≤ depth×width rows
-    VersionedState.commit(stateDir, batchId) { vdir =>
-      s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-          merged.schema)
-        .write.parquet(vdir.resolve("counters").toString)
     }
   }
 
@@ -1868,31 +1851,22 @@ object Relational extends Registry {
     * regardless of stream volume, and because bucket addition is
     * exactly mergeable the drained state equals a from-scratch
     * histogram bit-for-bit: q9e's lossless guarantee, not q9c's
-    * estimator tolerance). The histogram is collected to the driver
-    * before the write (bounded: ≤ ~1.1k rows). Additive — so the
-    * applied-batch ledger guards redelivery, committed atomically
-    * with the histogram via [[VersionedState]] (see cmsFoldBatch). */
+    * estimator tolerance). Additive — so the batch ledger
+    * guards redelivery, committed atomically with the histogram via
+    * [[VersionedState]] (see cmsFoldBatch). */
   def qtFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
     import s.implicits._
-    if (VersionedState.applied(stateDir, batchId)) return
     val bh = qtHist(batch
         .select(qtCentsOf($"l_extendedprice").as("cents")))
       .withColumnRenamed("cnt", "cnt_new")
-    val merged = VersionedState.tablePath(stateDir, "hist") match {
+    VersionedState.foldTable(s, stateDir, batchId, "hist") {
       case Some(hist) =>
-        s.read.parquet(hist.toString)
-          .join(bh, Seq("b"), "full")
+        hist.join(bh, Seq("b"), "full")
           .select($"b",
             (coalesce($"cnt", lit(0L)) + coalesce($"cnt_new", lit(0L)))
               .as("cnt"))
       case None => bh.select($"b", $"cnt_new".as("cnt"))
-    }
-    val rows = merged.collect() // bounded: ≤ |buckets| rows
-    VersionedState.commit(stateDir, batchId) { vdir =>
-      s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-          merged.schema)
-        .write.parquet(vdir.resolve("hist").toString)
     }
   }
 
@@ -2153,32 +2127,26 @@ object Relational extends Registry {
     * stays days × 2^lgK bytes regardless of stream volume. Because the
     * union is a register-wise MAX, the fold is also IDEMPOTENT: a
     * redelivered batch maxes registers against themselves and changes
-    * nothing — at-least-once delivery needs no dedup ledger here
-    * (contrast q9e's additive counters, which do). Collected to the
-    * driver before the overwrite (bounded: days × sketch bytes),
-    * making the read-modify-write safe. */
-  def dailyHllFoldBatch(s: SparkSession, stateDir: String,
+    * nothing — correctness under at-least-once delivery does not
+    * depend on the ledger here (contrast q9e's additive counters,
+    * which do). Committed through [[VersionedState]]. */
+  def dailyHllFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
     import s.implicits._
-    val skDir = java.nio.file.Paths.get(stateDir, "sketches")
     val bs = batch
       .select($"user_id", expr(s"ts div $DayNanos").as("day"))
       .groupBy($"day")
       .agg(hll_sketch_agg($"user_id", lit(HllLgK)).as("sk_new"))
-    val merged =
-      if (java.nio.file.Files.exists(skDir.resolve("_SUCCESS")))
-        s.read.parquet(skDir.toString)
-          .join(bs, Seq("day"), "full")
+    VersionedState.foldTable(s, stateDir, batchId, "sketches") {
+      case Some(prev) =>
+        prev.join(bs, Seq("day"), "full")
           .select($"day",
             when($"sk".isNull, $"sk_new")
               .when($"sk_new".isNull, $"sk")
               .otherwise(hll_union($"sk", $"sk_new",
                 allowDifferentLgConfigK = false)).as("sk"))
-      else bs.select($"day", $"sk_new".as("sk"))
-    val rows = merged.collect() // bounded: days × sketch bytes
-    s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-        merged.schema)
-      .write.mode("overwrite").parquet(skDir.toString)
+      case None => bs.select($"day", $"sk_new".as("sk"))
+    }
   }
 
   def rangeCardinality(s: SparkSession, dir: String): DataFrame = {

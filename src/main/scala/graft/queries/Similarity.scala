@@ -2447,7 +2447,8 @@ object Similarity extends Registry {
     * the production shape, same seam as Dedup.bloomFoldBatch). The
     * additive (count, Σ micro-cosine) state is NOT naturally
     * idempotent — unlike q9m's bit-OR, re-adding a redelivered batch
-    * would double-count — so the fold carries a batch LEDGER: an
+    * would double-count — so the fold relies on [[VersionedState]]'s
+    * batch LEDGER, committed with the stats in one atomic rename: an
     * applied `batchId` is skipped, the same transactional discipline
     * an exactly-once sink uses over at-least-once delivery.
     * StreamingSpec proves drained ≡ one-pass build bit-for-bit AND
@@ -2456,33 +2457,15 @@ object Similarity extends Registry {
     * bounded driver state; the batch assignment itself is the same
     * map-side literal argmax as every other path. */
   def ivfFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
-      batchEmb: DataFrame, centroidSrc: DataFrame): Unit = {
-    val appliedMark =
-      java.nio.file.Paths.get(stateDir, s"applied-$batchId")
-    if (java.nio.file.Files.exists(appliedMark)) return
-    val cents = collectCentroids(corpusOf(centroidSrc))
-    val fresh = cellStats(assignAgainst(
-      corpusOf(batchEmb.select(col("vec_id"), col("embedding"))), cents))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val cellDir = java.nio.file.Paths.get(stateDir, "cells")
-    val prior =
-      if (java.nio.file.Files.exists(cellDir.resolve("_SUCCESS")))
-        s.read.parquet(cellDir.toString)
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-      else Map.empty[Long, (Long, Long)]
-    import s.implicits._
-    val merged = (prior.keySet ++ fresh.keySet).toSeq.sorted.map { cell =>
-      val p = prior.getOrElse(cell, (0L, 0L))
-      val f = fresh.getOrElse(cell, (0L, 0L))
-      (cell, p._1 + f._1, p._2 + f._2)
+      batchEmb: DataFrame, centroidSrc: DataFrame): Unit =
+    VersionedState.foldTable(s, stateDir, batchId, "cells") { prior =>
+      val fresh = cellStats(assignAgainst(
+        corpusOf(batchEmb.select(col("vec_id"), col("embedding"))),
+        collectCentroids(corpusOf(centroidSrc))))
+      prior.fold(fresh)(_.unionAll(fresh).groupBy(col("cell"))
+        .agg(sum(col("n_vectors")).as("n_vectors"),
+          sum(col("sum_cos_micro")).as("sum_cos_micro")))
     }
-    merged.toDF("cell", "n_vectors", "sum_cos_micro").coalesce(1)
-      .write.mode("overwrite").parquet(cellDir.toString)
-    java.nio.file.Files.createFile(appliedMark)
-    ()
-  }
 
   // ------------------------------------------------------------------
   // q9p: PER-DIMENSION FEATURE MOMENTS, incrementally maintained — the
@@ -3170,26 +3153,17 @@ object Similarity extends Registry {
     * the one-shot batch attach EXACTLY, whatever the batch
     * boundaries — the order-independence that makes NSW insertion
     * distributable is also what makes it streamable. Edge-set union
-    * is naturally idempotent, but the applied-batch ledger still
+    * is naturally idempotent, but the batch ledger still
     * skips a redelivered batch (no wasted re-search), and state +
     * ledger commit in ONE atomic rename via [[VersionedState]]. */
   def nswAttachFoldBatch(s: SparkSession, stateDir: String,
       batchId: Long, batch: DataFrame, base: DataFrame,
-      baseEdges: DataFrame, parts: Int): Unit = {
-    if (VersionedState.applied(stateDir, batchId)) return
-    val links = nswAttachDelta(base, baseEdges,
-      withPt(corpusOf(batch), parts))
-    val merged = (VersionedState.tablePath(stateDir, "attach") match {
-      case Some(prev) => s.read.parquet(prev.toString).unionAll(links)
-      case None => links
-    }).distinct()
-    val rows = merged.collect() // bounded: ≤ |delta so far| × M rows
-    VersionedState.commit(stateDir, batchId) { vdir =>
-      s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-          merged.schema)
-        .write.parquet(vdir.resolve("attach").toString)
+      baseEdges: DataFrame, parts: Int): Unit =
+    VersionedState.foldTable(s, stateDir, batchId, "attach") { prev =>
+      val links = nswAttachDelta(base, baseEdges,
+        withPt(corpusOf(batch), parts))
+      prev.fold(links)(_.unionAll(links)).distinct()
     }
-  }
 
   /** Content-addressed MAINTAINED graph: base M-NN graph + batch
     * attach, stored once per corpus generation. The maintenance cost

@@ -2444,45 +2444,34 @@ object TextOps extends Registry {
     * documents into the stored LM count tables (the foreachBatch
     * production shape — the LM stays fresh as the crawl arrives).
     * Count addition is exactly mergeable, so the drained state equals
-    * a from-scratch build bit-for-bit, no estimator caveat. Tables are
-    * collected to the driver before the overwrite — bounded: the LM is
-    * vocab-sized (corpus-size-independent once the vocab saturates).
-    * Additive — so the applied-batch ledger guards redelivery, and
+    * a from-scratch build bit-for-bit, no estimator caveat.
+    * Additive — so the batch ledger guards redelivery, and
     * BOTH tables + ledger commit in ONE atomic rename via
     * [[graft.queries.VersionedState]] (see Relational.cmsFoldBatch):
-    * the old write-bigram, write-unigram, touch-marker order had two
-    * crash windows — a marker-less crash after the bigram write would
-    * double-count bigrams on redelivery. */
+    * a crash between the two table writes can never publish one
+    * without the other. */
   def lmFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
     import s.implicits._
-    import graft.queries.VersionedState
-    if (VersionedState.applied(stateDir, batchId)) return
     val ws = batch.select($"doc_id", split($"text", " ").as("ws"))
     val (bigB, uniB) = lmCountsOf(ws)
-    def foldRows(dirName: String, add: DataFrame, keys: Seq[String],
-        cnt: String): (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType) = {
+    def merge(live: Option[DataFrame], add: DataFrame, keys: Seq[String],
+        cnt: String): DataFrame = {
       val renamed = add.withColumnRenamed(cnt, "cnt_new")
-      val merged = VersionedState.tablePath(stateDir, dirName) match {
+      live match {
         case Some(d) =>
-          s.read.parquet(d.toString)
-            .join(renamed, keys, "full")
+          d.join(renamed, keys, "full")
             .select(keys.map(col) :+
               (coalesce(col(cnt), lit(0L)) + coalesce(col("cnt_new"), lit(0L)))
                 .as(cnt): _*)
         case None =>
           renamed.select(keys.map(col) :+ col("cnt_new").as(cnt): _*)
       }
-      (merged.collect(), merged.schema) // bounded: vocab-sized
     }
-    val (bigRows, bigSchema) = foldRows("bigram", bigB, Seq("a", "b"), "c12")
-    val (uniRows, uniSchema) = foldRows("unigram", uniB, Seq("w"), "c1")
-    VersionedState.commit(stateDir, batchId) { vdir =>
-      s.createDataFrame(s.sparkContext.parallelize(bigRows.toSeq, 1),
-        bigSchema).write.parquet(vdir.resolve("bigram").toString)
-      s.createDataFrame(s.sparkContext.parallelize(uniRows.toSeq, 1),
-        uniSchema).write.parquet(vdir.resolve("unigram").toString)
+    VersionedState.fold(s, stateDir, batchId, "bigram", "unigram") {
+      case Seq(big, uni) =>
+        Seq(merge(big, bigB, Seq("a", "b"), "c12"),
+          merge(uni, uniB, Seq("w"), "c1"))
     }
   }
 
@@ -3129,65 +3118,57 @@ object TextOps extends Registry {
     * two live-stats scalars decrement — the corpus is never consulted,
     * and the postings layout is untouched (masked serves see the new
     * tombstones instantly; physical compaction stays a scheduled
-    * offline pass, exactly as in production). The list is collected to
-    * the driver before the overwrite (bounded: takedown lists are
-    * orders of magnitude smaller than corpora), which also makes the
-    * read-modify-write safe against reading the directory being
-    * replaced. Takedown ids with no postings rows are persisted with a
-    * null dl and no stats decrement — early-arriving takedowns (doc
-    * not yet indexed) survive to mask later appends. */
+    * offline pass, exactly as in production). The tombstone list and
+    * the live stats commit together through [[VersionedState]]; the
+    * corpus-sized postings stay an immutable base beside the versions.
+    * Takedown ids with no postings rows are persisted with a null dl
+    * and no stats decrement — early-arriving takedowns (doc not yet
+    * indexed) survive to mask later appends. */
+  def tombFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
+      batch: DataFrame): Unit = {
+    import s.implicits._
+    VersionedState.fold(s, stateDir, batchId, "tombstones", "stats_live") {
+      case Seq(Some(stored), Some(stats)) =>
+        val fresh = batch.select($"doc_id").distinct()
+          .join(stored.select($"doc_id"), Seq("doc_id"), "left_anti")
+        // dl recovers from the victims' own postings rows where the doc
+        // is indexed; ids with NO postings row are persisted too (null
+        // dl) — a takedown arriving before its document is indexed must
+        // still mask a later q9b-style append, not silently vanish.
+        // Stats decrement only for matched victims: an unindexed id
+        // never contributed to n_docs/sum_dl in the first place.
+        val victims = s.read.parquet(s"$stateDir/postings")
+          .join(fresh, Seq("doc_id"), "left_semi")
+          .select($"doc_id", $"dl").distinct()
+        val entries = fresh.join(victims, Seq("doc_id"), "left")
+          .select($"doc_id", $"dl")
+        val dead = victims.agg(count(lit(1)).cast("long").as("n_dead"),
+          coalesce(sum($"dl"), lit(0L)).as("dl_dead"))
+        Seq(stored.select($"doc_id", $"dl").unionAll(entries),
+          stats.crossJoin(dead).select(
+            ($"n_docs" - $"n_dead").as("n_docs"),
+            ($"sum_dl" - $"dl_dead").as("sum_dl")))
+      case _ => sys.error(
+        s"tombFoldBatch: no state in $stateDir (seedTombstoneState first)")
+    }
+  }
+
   /** Seed a PRE-takedown index state (full-corpus postings + full
     * stats, no tombstones yet) — "the index as built before the
     * takedown feed started", the starting point of the streaming
-    * fold's lifecycle. */
+    * fold's lifecycle. The stats and the empty tombstone list commit
+    * as batch -1, an id foreachBatch never emits. */
   def seedTombstoneState(s: SparkSession, dir: String,
       stateDir: String): Unit = {
     import s.implicits._
     val docs = tokenizedDocs(s, dir)
-    postingsOf(docs)
-      .write.mode("overwrite").partitionBy("term_bucket")
+    postingsOf(docs).write.partitionBy("term_bucket")
       .parquet(s"$stateDir/postings")
-    docs.agg(count(lit(1)).cast("long").as("n_docs"),
-        sum($"dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$stateDir/stats_live")
-  }
-
-  def tombFoldBatch(s: SparkSession, stateDir: String,
-      batch: DataFrame): Unit = {
-    import s.implicits._
-    val tombDir = java.nio.file.Paths.get(stateDir, "tombstones")
-    val statsDir = java.nio.file.Paths.get(stateDir, "stats_live")
-    val postDir = java.nio.file.Paths.get(stateDir, "postings")
-    val stored =
-      if (java.nio.file.Files.exists(tombDir.resolve("_SUCCESS")))
-        s.read.parquet(tombDir.toString)
-      else Seq.empty[(Long, Long)].toDF("doc_id", "dl")
-    val fresh = batch.select($"doc_id").distinct()
-      .join(stored.select($"doc_id"), Seq("doc_id"), "left_anti")
-    // dl recovers from the victims' own postings rows where the doc is
-    // indexed; ids with NO postings row are persisted too (null dl) —
-    // a takedown arriving before its document is indexed must still
-    // mask a later q9b-style append, not silently vanish. Stats
-    // decrement only for matched victims: an unindexed id never
-    // contributed to n_docs/sum_dl in the first place.
-    val victims = s.read.parquet(postDir.toString)
-      .join(fresh, Seq("doc_id"), "left_semi")
-      .select($"doc_id", $"dl").distinct()
-    val entries = fresh.join(victims, Seq("doc_id"), "left")
-      .select($"doc_id", $"dl")
-    val merged = stored.select($"doc_id", $"dl").unionAll(entries)
-    val rows = merged.collect() // bounded: tombstone-list-sized
-    val dead = victims.agg(count(lit(1)).cast("long"), sum($"dl"))
-      .collect().head
-    s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-        merged.schema)
-      .write.mode("overwrite").parquet(tombDir.toString)
-    val st = s.read.parquet(statsDir.toString).collect().head
-    Seq((st.getLong(0) - dead.getLong(0),
-        st.getLong(1) -
-          (if (dead.isNullAt(1)) 0L else dead.getLong(1))))
-      .toDF("n_docs", "sum_dl")
-      .write.mode("overwrite").parquet(statsDir.toString)
+    VersionedState.fold(s, stateDir, -1L, "tombstones", "stats_live") { _ =>
+      Seq(Seq.empty[(Long, Long)].toDF("doc_id", "dl"),
+        docs.agg(count(lit(1)).cast("long").as("n_docs"),
+          sum($"dl").as("sum_dl")))
+    }
   }
 
   def tombstonePurge(s: SparkSession, dir: String): DataFrame = {
@@ -3671,17 +3652,16 @@ object TextOps extends Registry {
     * bottom-k merge. Unlike the counter folds (cms/qt/lm), KMV merge
     * is IDEMPOTENT — bottom-k(S ∪ S) = bottom-k(S), so re-merging
     * already-seen content cannot corrupt the state even when the
-    * applied-batch ledger MISSES it (content redelivered under a new
+    * batch ledger MISSES it (content redelivered under a new
     * batchId) — exactly-once by algebra, not just by bookkeeping.
     * The ledger still skips known batchIds (no wasted scan), and
     * state + ledger commit in one atomic rename. */
   def kmvFoldBatch(s: SparkSession, stateDir: String, batchId: Long,
       batch: DataFrame): Unit = {
-    if (VersionedState.applied(stateDir, batchId)) return
     val delta = kmvSketchesOf(batch).withColumnRenamed("sk", "skd")
-    val merged = VersionedState.tablePath(stateDir, "sketches") match {
+    VersionedState.foldTable(s, stateDir, batchId, "sketches") {
       case Some(prev) =>
-        s.read.parquet(prev.toString).withColumnRenamed("sk", "skb")
+        prev.withColumnRenamed("sk", "skb")
           .join(delta, Seq("source"), "full")
           .select(col("source"), expr(
             s"""slice(array_sort(array_distinct(concat(
@@ -3689,12 +3669,6 @@ object TextOps extends Registry {
                |  coalesce(skd, CAST(array() AS ARRAY<BIGINT>))))),
                |1, $KmvK)""".stripMargin).as("sk"))
       case None => delta.withColumnRenamed("skd", "sk")
-    }
-    val rows = merged.collect() // bounded: |sources| × ≤k longs
-    VersionedState.commit(stateDir, batchId) { vdir =>
-      s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
-          merged.schema)
-        .write.parquet(vdir.resolve("sketches").toString)
     }
   }
 

@@ -2,14 +2,18 @@ package graft.queries
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** Atomically-committed, versioned store for the additive streaming
-  * folds' small state (q9e's CMS grid, q9t's histogram, q9h's LM
-  * tables). The naive layout — overwrite the state directory, then
-  * touch an `applied-<batchId>` marker — has a crash window between
-  * the two writes that leaves ALREADY-MERGED counters marked
-  * unapplied, so a redelivered batch double-counts; and the overwrite
-  * itself is non-atomic. This store closes both windows with the
-  * version-pointer commit real lakehouse logs use:
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Atomically-committed, versioned store for the streaming folds'
+  * small state: every `*FoldBatch` except qa7's per-batch-partition
+  * kAnon writer folds through [[fold]]. Overwriting a state directory
+  * in place is not atomic (Spark deletes the directory before the
+  * write job runs, so a failed write leaves no state and the next
+  * fold starts over from its batch alone), and touching an
+  * `applied-<batchId>` marker after the write leaves ALREADY-MERGED
+  * counters marked unapplied if the process dies in between, so a
+  * redelivered batch double-counts. This store closes both windows
+  * with the version-pointer commit real lakehouse logs use:
   *
   *  - each commit writes a FRESH version directory `v-<batchId>-<n>/`
   *    holding the state's parquet table(s) PLUS the applied-batch
@@ -20,11 +24,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *    write-temp + ATOMIC_MOVE rename.
   *
   * A crash before the swap leaves the previous version fully live —
-  * its grid and ledger still mutually consistent — and the orphaned
+  * its tables and ledger still mutually consistent — and the orphaned
   * version directory is garbage-collected by the next successful
-  * commit. A crash after the swap publishes grid AND marker together.
-  * State and ledger can never disagree, which is what makes
-  * at-least-once redelivery exactly-once at the sink.
+  * commit. A crash after the swap publishes tables AND marker
+  * together. State and ledger can never disagree, which is what makes
+  * at-least-once redelivery exactly-once at the sink. Because the live
+  * version stays in place until the swap, a fold's new tables are
+  * written straight from frames over the live ones.
   *
   * Single-writer by contract (one streaming query owns a state dir —
   * the foreachBatch execution model); readers resolve through
@@ -35,13 +41,18 @@ object VersionedState {
   private def currentFile(stateDir: String): Path =
     Paths.get(stateDir, "CURRENT")
 
-  /** The live committed version directory, if any commit exists. */
+  /** The live committed version directory, if any commit exists. A
+    * `CURRENT` naming a missing version fails: treating it as "no
+    * state" would rebuild the state from the next batch alone. */
   def current(stateDir: String): Option[Path] = {
     val cf = currentFile(stateDir)
     if (!Files.exists(cf)) None
     else {
-      val d = Paths.get(stateDir, Files.readString(cf).trim)
-      if (Files.isDirectory(d)) Some(d) else None
+      val name = Files.readString(cf).trim
+      val d = Paths.get(stateDir, name)
+      require(Files.isDirectory(d),
+        s"VersionedState $stateDir: CURRENT names missing version $name")
+      Some(d)
     }
   }
 
@@ -52,16 +63,44 @@ object VersionedState {
 
   /** Has `batchId` been folded into the LIVE state? (The ledger lives
     * inside the committed version, so this can never report a batch
-    * the visible counters don't contain.) */
-  def applied(stateDir: String, batchId: Long): Boolean =
+    * the visible tables don't contain.) */
+  private[graft] def applied(stateDir: String, batchId: Long): Boolean =
     current(stateDir).exists(d =>
       Files.exists(d.resolve(s"_applied-$batchId")))
+
+  /** Fold one batch into the state. Unless `batchId` is already in the
+    * ledger, `next` receives each of `tables` as a frame over the live
+    * version (None before the first commit) and returns the tables'
+    * new frames in the same order; they are written into a fresh
+    * version, which [[commit]] publishes with the batch. A write that
+    * throws publishes nothing and leaves the batch unapplied. */
+  def fold(spark: SparkSession, stateDir: String, batchId: Long,
+      tables: String*)(next: Seq[Option[DataFrame]] => Seq[DataFrame])
+      : Unit = {
+    if (applied(stateDir, batchId)) return
+    val live = current(stateDir)
+    val frames = next(tables.map(t =>
+      live.map(v => spark.read.parquet(v.resolve(t).toString))))
+    // one file per table: fold state is small by contract, and the
+    // next fold reads it back whole
+    commit(stateDir, batchId) { vdir =>
+      tables.zip(frames).foreach { case (t, df) =>
+        df.coalesce(1).write.parquet(vdir.resolve(t).toString)
+      }
+    }
+  }
+
+  /** The one-table case of [[fold]]. */
+  def foldTable(spark: SparkSession, stateDir: String, batchId: Long,
+      table: String)(next: Option[DataFrame] => DataFrame): Unit =
+    fold(spark, stateDir, batchId, table)(live => Seq(next(live.head)))
 
   /** Commit a new version: `write(versionDir)` materializes the
     * state's parquet table(s) under a fresh directory, the applied
     * ledger is carried forward plus `batchId`, and `CURRENT` swaps
     * atomically. Superseded versions are then deleted. */
-  def commit(stateDir: String, batchId: Long)(write: Path => Unit): Unit = {
+  private[graft] def commit(stateDir: String, batchId: Long)(
+      write: Path => Unit): Unit = {
     Files.createDirectories(Paths.get(stateDir))
     val prev = current(stateDir)
     // nanoTime disambiguates a re-fold of the same batchId after a

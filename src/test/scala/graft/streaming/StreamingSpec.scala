@@ -445,8 +445,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
       .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.queries.Relational.hllFoldBatch(spark, stateDir, df)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+        graft.queries.Relational.hllFoldBatch(spark, stateDir, bid, df)
         folds.incrementAndGet(); ()
       }
       .start()
@@ -454,7 +454,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(folds.get() == 3, s"expected 3 per-file folds, got ${folds.get()}")
 
     val streamed = spark.read
-      .parquet(java.nio.file.Paths.get(stateDir, "sketches").toString)
+      .parquet(graft.queries.VersionedState
+        .tablePath(stateDir, "sketches").get.toString)
       .select(col("o_orderpriority"),
         hll_sketch_estimate(col("sk_base")).as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -642,8 +643,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // micro-batches, each trigger sketches only itself and merges into
     // the per-day register store (Relational.dailyHllFoldBatch). HLL
     // union is a register-wise max, so unlike the additive folds the
-    // SAME batch can be redelivered with no dedup ledger — estimates
-    // must be unchanged.
+    // SAME content can be redelivered under a batch id the ledger has
+    // not seen — estimates must be unchanged.
     import org.apache.spark.sql.functions._
     val streamDir = java.nio.file.Files.createTempDirectory("dhll-stream")
     val stateDir = java.nio.file.Files
@@ -657,14 +658,16 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
       .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.queries.Relational.dailyHllFoldBatch(spark, stateDir, df); ()
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+        graft.queries.Relational.dailyHllFoldBatch(spark, stateDir, bid, df)
+        ()
       }
       .start()
     try query.processAllAvailable() finally query.stop()
 
     def estimates(): Map[Long, Long] = spark.read
-      .parquet(java.nio.file.Paths.get(stateDir, "sketches").toString)
+      .parquet(graft.queries.VersionedState
+        .tablePath(stateDir, "sketches").get.toString)
       .select(col("day"), hll_sketch_estimate(col("sk")).as("est"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val streamed = estimates()
@@ -678,8 +681,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(streamed == rebuilt && rebuilt.size > 5,
       "stream-folded per-day estimates diverged from a from-scratch build")
 
-    // redelivery: folding the ENTIRE feed again must change nothing
-    graft.queries.Relational.dailyHllFoldBatch(spark, stateDir, ev)
+    // redelivery: folding the ENTIRE feed again, under a batch id the
+    // ledger has not seen, must change nothing
+    graft.queries.Relational.dailyHllFoldBatch(spark, stateDir, 99L, ev)
     assert(estimates() == streamed,
       "redelivered batch changed the register estimates")
   }
@@ -689,7 +693,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // the q9u state machine driven by a takedown STREAM: the index is
     // seeded pre-takedown, the mod-13 tombstone ids arrive as three
     // micro-batches (TextOps.tombFoldBatch — anti-join vs the stored
-    // list makes redelivery a no-op), and the drained state must serve
+    // list makes redelivered content a no-op even under a batch id the
+    // ledger has not seen), and the drained state must serve
     // exactly what q9u's one-shot purge serves.
     import org.apache.spark.sql.functions._
     import graft.queries.TextOps
@@ -709,26 +714,25 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
       .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        TextOps.tombFoldBatch(spark, stateDir, df)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+        TextOps.tombFoldBatch(spark, stateDir, bid, df)
         folds.incrementAndGet(); ()
       }
       .start()
     try query.processAllAvailable() finally query.stop()
     assert(folds.get() == 3, s"expected 3 per-file folds, got ${folds.get()}")
 
-    // redelivery: folding the ENTIRE feed again must change nothing
+    def live(table: String) = spark.read.parquet(
+      graft.queries.VersionedState.tablePath(stateDir, table).get.toString)
+    // redelivery: folding the ENTIRE feed again, under a batch id the
+    // ledger has not seen, must change nothing
     def stateSnapshot(): (Set[Long], (Long, Long)) = {
-      val t = spark.read
-        .parquet(java.nio.file.Paths.get(stateDir, "tombstones").toString)
-        .collect().map(_.getLong(0)).toSet
-      val st = spark.read
-        .parquet(java.nio.file.Paths.get(stateDir, "stats_live").toString)
-        .collect().head
+      val t = live("tombstones").collect().map(_.getLong(0)).toSet
+      val st = live("stats_live").collect().head
       (t, (st.getLong(0), st.getLong(1)))
     }
     val before = stateSnapshot()
-    TextOps.tombFoldBatch(spark, stateDir, tombIds)
+    TextOps.tombFoldBatch(spark, stateDir, 99L, tombIds)
     assert(stateSnapshot() == before,
       "redelivered takedown batch mutated the state")
 
@@ -736,7 +740,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // persisted (null dl, ready to mask a later append) WITHOUT
     // touching the live stats — it never contributed to them
     val unknownId = 999999999L
-    TextOps.tombFoldBatch(spark, stateDir,
+    TextOps.tombFoldBatch(spark, stateDir, 100L,
       spark.range(1).select(lit(unknownId).as("doc_id")))
     val (tombsAfter, statsAfter) = stateSnapshot()
     assert(tombsAfter == before._1 + unknownId,
@@ -744,7 +748,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(statsAfter == before._2,
       "unindexed takedown id must not decrement live stats")
     // and redelivering it is still a no-op
-    TextOps.tombFoldBatch(spark, stateDir,
+    TextOps.tombFoldBatch(spark, stateDir, 101L,
       spark.range(1).select(lit(unknownId).as("doc_id")))
     assert(stateSnapshot() == ((tombsAfter, statsAfter)),
       "redelivered unknown-id batch mutated the state")
@@ -753,10 +757,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // purge serve (same tombstone set, same decremented stats)
     val post = spark.read
       .parquet(java.nio.file.Paths.get(stateDir, "postings").toString)
-    val statsLive = spark.read
-      .parquet(java.nio.file.Paths.get(stateDir, "stats_live").toString)
-    val tomb = spark.read
-      .parquet(java.nio.file.Paths.get(stateDir, "tombstones").toString)
+    val statsLive = live("stats_live")
+    val tomb = live("tombstones")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val folded = rows(TextOps.maskedServe(spark, post, statsLive, tomb,
@@ -951,7 +953,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     try query.processAllAvailable() finally query.stop()
 
     def cells(): Map[Long, (Long, Long)] = spark.read
-      .parquet(java.nio.file.Paths.get(stateDir, "cells").toString)
+      .parquet(graft.queries.VersionedState
+        .tablePath(stateDir, "cells").get.toString)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     val streamed = cells()
@@ -990,14 +993,15 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
       .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.queries.Dedup.bloomFoldBatch(spark, stateDir, df); ()
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+        graft.queries.Dedup.bloomFoldBatch(spark, stateDir, bid, df); ()
       }
       .start()
     try query.processAllAvailable() finally query.stop()
 
     def words(): Map[Long, Long] = spark.read
-      .parquet(java.nio.file.Paths.get(stateDir, "words").toString)
+      .parquet(graft.queries.VersionedState
+        .tablePath(stateDir, "words").get.toString)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val streamed = words()
     val rebuilt = graft.queries.Dedup
@@ -1005,8 +1009,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed == rebuilt && rebuilt.nonEmpty,
       "stream-folded bloom diverged from one-pass build")
-    // redelivery: folding the WHOLE corpus again is a no-op
-    graft.queries.Dedup.bloomFoldBatch(spark, stateDir, docs)
+    // redelivery: folding the WHOLE corpus again, under a batch id the
+    // ledger has not seen, is a no-op
+    graft.queries.Dedup.bloomFoldBatch(spark, stateDir, 99L, docs)
     assert(words() == streamed, "redelivered fold mutated the filter")
   }
 
